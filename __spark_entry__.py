@@ -26,6 +26,8 @@ if _REPO_DIR not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jsonl_dataingestion_pipeline_spark.operators.common import SessionMemo
+
 AS_OF = "2024-06-01"  # pinned clock for all today-relative operators
 
 
@@ -1684,47 +1686,14 @@ _DEDUP_SIM_QUERIES.update(
 )
 
 
-_Q40_CANON_CACHE: dict = {}
+_Q40_CANON = SessionMemo()
 
 
-def q40_shipment_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE shipment pipeline (clean -> D1-D7 -> T1-T7 -> D9-D11
-    docs) on a canonical frame synthesized from orders. Fully
-    oracle-checked: the output carries md5 digests + lengths of the T6
-    milestones narrative and the T7 combined_content body, and the DuckDB
-    oracle rebuilds both strings byte-for-byte (every leg/section of
-    `operators/narrative.py` and `operators/content.py` restated in SQL),
-    so a single wrong character anywhere in the 700-line narrative
-    assembly fails the hash check.
-
-    The ~130-column canonical projection is a pure function of the
-    schema constants, so its Column trees are memoized per application
-    (the established clean_columns idiom; the measured saving is small
-    — warm construction is Catalyst-analysis-bound, not py4j-bound —
-    but the rebuild cost was pure waste either way)."""
-    from jsonl_dataingestion_pipeline_spark.plans.shipment import (
-        build_documents,
-        transform_shipments,
-    )
+def _q40_canonical_projection() -> list:
+    """The ~130-column canonical shipment projection q40 synthesizes from
+    orders: 27 filled columns, every other canonical column NULL."""
     from jsonl_dataingestion_pipeline_spark.schema import CANONICAL_COLUMNS
 
-    o = _t(spark, sf_dir, "orders")
-    cache_key = spark.sparkContext.applicationId
-    cached = _Q40_CANON_CACHE.get(cache_key)
-    if cached is not None:
-        canonical = o.select(*cached)
-        docs = build_documents(transform_shipments(canonical, as_of=AS_OF))
-        return docs.select(
-            "document_id",
-            F.col("metadata.shipment_status").alias("status"),
-            F.col("source_group"),
-            F.length("content").cast("int").alias("content_len"),
-            F.length(F.col("metadata.milestones")).cast("int").alias(
-                "milestones_len"
-            ),
-            F.md5(F.col("content")).alias("content_md5"),
-            F.md5(F.col("metadata.milestones")).alias("milestones_md5"),
-        )
     k = F.col("o_orderkey")
     d = F.col("o_orderdate").cast("date")
 
@@ -1769,14 +1738,32 @@ def q40_shipment_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cargo_weight_kg": (k % 5000).cast("string"),
         "seal_number": F.concat(F.lit("SEAL"), k.cast("string")),
     }
-    projection = [
+    return [
         (filled[c] if c in filled else F.lit(None).cast("string")).alias(c)
         for c in CANONICAL_COLUMNS
     ]
-    while len(_Q40_CANON_CACHE) >= 4:  # bound: evict oldest entry
-        _Q40_CANON_CACHE.pop(next(iter(_Q40_CANON_CACHE), None), None)
-    _Q40_CANON_CACHE[cache_key] = projection
-    canonical = o.select(*projection)
+
+
+def q40_shipment_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The COMPLETE shipment pipeline (clean -> D1-D7 -> T1-T7 -> D9-D11
+    docs) on a canonical frame synthesized from orders. Fully
+    oracle-checked: the output carries md5 digests + lengths of the T6
+    milestones narrative and the T7 combined_content body, and the DuckDB
+    oracle rebuilds both strings byte-for-byte (every leg/section of
+    `operators/narrative.py` and `operators/content.py` restated in SQL),
+    so a single wrong character anywhere in the 700-line narrative
+    assembly fails the hash check.
+
+    The canonical projection is memoized per application in a
+    ``SessionMemo`` (the measured saving is small — warm construction is
+    Catalyst-analysis-bound, not py4j-bound)."""
+    from jsonl_dataingestion_pipeline_spark.plans.shipment import (
+        build_documents,
+        transform_shipments,
+    )
+
+    projection = _Q40_CANON.get(spark, None, _q40_canonical_projection)
+    canonical = _t(spark, sf_dir, "orders").select(*projection)
     docs = build_documents(transform_shipments(canonical, as_of=AS_OF))
     return docs.select(
         "document_id",
@@ -7376,7 +7363,7 @@ _ORACLE_DEDUP_SIM["q129_rolling_stats"] = r"""
            -- float op chain as rolling_stats: cast -> /1e2 -> /n -> round
            ROUND(CAST(SUM(CAST(ROUND(value * 1e2) AS BIGINT)) OVER w
                       AS DOUBLE)
-                 / 1e2 / CAST(COUNT(*) OVER w AS DOUBLE), 6) AS roll_mean,
+                 / 1e2 / CAST(COUNT(value) OVER w AS DOUBLE), 6) AS roll_mean,
            ROUND(MIN(value) OVER w, 6) AS roll_min,
            ROUND(MAX(value) OVER w, 6) AS roll_max
     FROM (
@@ -11218,8 +11205,8 @@ _UNION_MERGES["q39_embedding_neardup"].append(
 # both engines), so the exact cosine top-k IS the planted set and a
 # correct IVFADC retrieves it (recall 1.0 measured at sf0.001/0.01/
 # 0.1) while an indexing bug (LUT off-by-one, wrong cell filter)
-# scores ~0. Recall emitted in integer micro-units; a pytest floor
-# (tests/test_oracles.py) asserts recall >= 0.5.
+# scores ~0. Recall emitted in integer micro-units; no pytest floor
+# guards it yet, only the oracle's value hash.
 
 _AUD_CELLS, _AUD_CIT = 4, 1
 _AUD_M, _AUD_NCODES, _AUD_PIT = 4, 8, 2

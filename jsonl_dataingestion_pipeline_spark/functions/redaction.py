@@ -69,9 +69,3 @@ def pii_count(c: ColumnOrName, kind: str) -> Column:
     t = F.coalesce(_col(c).cast("string"), F.lit(""))
     return (F.size(F.split(t, PII_PATTERNS[kind], -1)) - F.lit(1)).cast("int")
 
-
-def pii_flags(c: ColumnOrName, kinds: Sequence[str] = DEFAULT_KINDS) -> Column:
-    """Struct of per-kind match counts — one scan, all kinds."""
-    return F.struct(
-        *[pii_count(c, k).alias(f"n_{k}") for k in kinds]
-    )

@@ -128,15 +128,6 @@ def stopword_ratio(
     )
 
 
-def punct_ratio(c: ColumnOrName, scale: int = 4) -> Column:
-    """Fraction of characters that are sentence punctuation."""
-    t = _col(c).cast("string")
-    puncts = F.length(t) - F.length(F.regexp_replace(t, r"[.,;:!?]", ""))
-    return F.round(
-        puncts / F.greatest(F.length(t), F.lit(1)).cast("double"), scale
-    )
-
-
 # A small, fixed English stopword list used by the default quality score.
 DEFAULT_STOPWORDS: tuple[str, ...] = (
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",

@@ -7,6 +7,9 @@ grew to need the same barrier, so it lives here as the one public copy
 (ADVICE r7). ``operators.dedup._pipeline_break`` remains as an alias for
 the existing call sites.
 
+:class:`SessionMemo` is the one memoization policy for Column trees
+and per-frame censuses.
+
 The integer gradient-descent contract (round 9, VERDICT r8 item 6):
 ``functions/classifier.py::train_classifier`` (driver-side k-weight
 state) and ``operators/preference.py::bt_strengths`` (distributed
@@ -22,7 +25,11 @@ bit-for-bit unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import threading
+from collections import OrderedDict
+from typing import Any, Callable, Hashable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: the shared integer grid: state and residuals live in 1e-9 nano-units
@@ -62,6 +69,56 @@ def parallelism_floor(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
+
+
+class SessionMemo:
+    """Bounded, thread-safe memo scoped to one Spark application.
+
+    The shipment stages (clean, derive, summaries, narrative, content,
+    documents) each build a Column tree of tens to hundreds of nodes.
+    Building one is seconds of py4j round-trips in Python and does
+    not depend on the data: it is a pure function of the input schema
+    and the stage's arguments, and a Column is immutable and reusable
+    across DataFrames. So each stage builds its tree once per key and
+    reuses it.
+
+    - **Scope:** every key is prefixed with the application id, because
+      a Column tree must not outlive its SparkContext.
+    - **LRU:** a hit moves the entry to the end; inserting past ``cap``
+      evicts the least recently used entry, so a stopped application's
+      trees are released instead of leaking.
+    - **Locking:** one lock guards the entries. ``build()`` runs outside
+      it, so two threads missing on one key may both build; the last
+      insert wins, and an entry is never half-written. A ``build()``
+      that raises leaves nothing cached.
+
+    Keys must be hashable, so a stage keys an ``as_of`` Column by
+    ``str(as_of)``. That repr is not injective (``F.lit("x")`` and
+    ``F.col("x")`` can both render ``Column<'x'>``): pass ``as_of`` as a
+    self-describing expression such as ``F.lit("2024-01-01").cast("date")``
+    or ``F.current_date()``, as every in-repo caller does.
+    """
+
+    def __init__(self, cap: int = 8) -> None:
+        self.cap = cap
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
+        """The value memoized under ``key`` in ``spark``'s application,
+        calling ``build()`` to make it on a miss."""
+        full_key = (spark.sparkContext.applicationId, key)
+        with self._lock:
+            if full_key in self._entries:
+                self._entries.move_to_end(full_key)
+                return self._entries[full_key]
+        value = build()
+        with self._lock:
+            self._entries[full_key] = value
+            self._entries.move_to_end(full_key)
+            while len(self._entries) > self.cap:
+                self._entries.popitem(last=False)
+        return value
 
 
 def fast_sigmoid(z: Column) -> Column:

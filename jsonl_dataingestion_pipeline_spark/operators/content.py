@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 from ..functions.arrays import join_for_text
 from ..functions.cleaning import nonblank
 from ..functions.dates import fmt_display
+from .common import SessionMemo
 
 
 def _opt(cond: Column, *parts: Column | str) -> Column:
@@ -43,26 +44,23 @@ def _fmt_for_text(c: Column, dtype: T.DataType) -> Column:
     return nonblank(c.cast("string"))
 
 
-_CONTENT_CACHE: dict = {}
+_CONTENT = SessionMemo()
 
 
 def combined_content(df: DataFrame, *, content_col: str = "combined_content") -> DataFrame:
     """Append the combined_content column to a fully derived DataFrame.
 
-    The T7 expression is a ~400-node Column tree; building it costs
-    thousands of py4j round-trips (~3 s of driver time per call, data-
-    independent). The tree depends only on the input schema, and Column
-    expressions are immutable and reusable across DataFrames, so it is
-    memoized per (Spark application, schema) — resubmitting the pipeline
-    pays the construction cost once per driver process."""
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        tuple((f.name, str(f.dataType)) for f in df.schema.fields),
-    )
-    cached = _CONTENT_CACHE.get(cache_key)
-    if cached is not None:
-        return df.withColumn(content_col, cached)
-    dtypes = dict(df.schema.fields and [(f.name, f.dataType) for f in df.schema.fields])
+    The T7 expression is a ~400-node Column tree (~3 s of py4j
+    round-trips to build), memoized by schema in a ``SessionMemo``."""
+    key = tuple((f.name, str(f.dataType)) for f in df.schema.fields)
+    col = _CONTENT.get(df.sparkSession, key, lambda: _content_tree(df.schema))
+    return df.withColumn(content_col, col)
+
+
+def _content_tree(schema: T.StructType) -> Column:
+    """The T7 body over the fields of ``schema`` (missing fields read as
+    NULL, so their fragments drop out)."""
+    dtypes = {f.name: f.dataType for f in schema.fields}
 
     def v(name: str) -> Column:
         if name not in dtypes:
@@ -439,9 +437,4 @@ def combined_content(df: DataFrame, *, content_col: str = "combined_content") ->
         F.coalesce(container_number, F.lit("UNKNOWN")),
         F.lit("."),
     )
-    col = F.when(body == "", fallback).otherwise(body)
-    while len(_CONTENT_CACHE) >= 8:  # bound: evict oldest entry (stopped
-        # applications would otherwise leak their py4j Column graphs)
-        _CONTENT_CACHE.pop(next(iter(_CONTENT_CACHE), None), None)
-    _CONTENT_CACHE[cache_key] = col
-    return df.withColumn(content_col, col)
+    return F.when(body == "", fallback).otherwise(body)

@@ -40,13 +40,14 @@ from jsonl_dataingestion_pipeline_spark.functions.textstats import (
     token_count,
     tokens,
 )
+from jsonl_dataingestion_pipeline_spark.operators.common import SessionMemo
 
 _LOG = logging.getLogger(__name__)
 
-# (benchmark semanticHash, text_col, id_col, shingle_k, max_bench_df)
-# -> hot-shingle count: funds fuzzy_decontaminate's drop log exactly
-# once per distinct benchmark plan (see the in-function note).
-_CAP_MEMO: dict = {}
+# (id(benchmark), text_col, id_col, shingle_k, max_bench_df)
+# -> (hot-shingle count, benchmark): funds fuzzy_decontaminate's drop log
+# once per benchmark frame (see the in-function note).
+_CAP_MEMO = SessionMemo(cap=256)
 
 
 # ---------------------------------------------------------------------------
@@ -1063,23 +1064,11 @@ def fuzzy_decontaminate(
         # be re-created by the caller anyway (its cached plans would be
         # stale too).
         key = (id(benchmark), text_col, id_col, shingle_k, max_bench_df)
-        if key not in _CAP_MEMO:
-            n_hot = b_stats.filter(
-                F.col("__df") > max_bench_df
-            ).count()
-            # bounded LRU: evict least-recently-used entries to make
-            # room BEFORE inserting (>= so steady-state capacity is
-            # exactly 256, not 257) instead of discarding every
-            # memoized census at once (ADVICE r7) — a dropped entry
-            # releases its benchmark frame (and JVM plan) while the
-            # hot ones stay warm
-            while len(_CAP_MEMO) >= 256:
-                _CAP_MEMO.pop(next(iter(_CAP_MEMO), None), None)
-            _CAP_MEMO[key] = (n_hot, benchmark)
-        else:
-            # move-to-end on hit so eviction order is true LRU
-            n_hot = _CAP_MEMO.pop(key)[0]
-            _CAP_MEMO[key] = (n_hot, benchmark)
+        n_hot, _ = _CAP_MEMO.get(
+            benchmark.sparkSession,
+            key,
+            lambda: (b_stats.filter(F.col("__df") > max_bench_df).count(), benchmark),
+        )
         if n_hot:
             _LOG.warning(
                 "fuzzy_decontaminate: max_bench_df=%d dropped %d hot "

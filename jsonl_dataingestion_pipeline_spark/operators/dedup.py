@@ -63,19 +63,6 @@ def exact_dedup(
     return df.join(reps, on=id_col, how="leftsemi")
 
 
-def duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Per-content-hash stats: representative id + multiplicity (>1 only)."""
-    return (
-        df.select(content_key(F.col(text_col)).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).cast("long").alias("n_copies"),
-        )
-        .filter(F.col("n_copies") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Pipeline breaks
 # ---------------------------------------------------------------------------

@@ -17,12 +17,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.cleaning import nonblank
 from ..functions.dates import month_group, month_tag
-
-
-def default_as_of() -> Column:
-    return F.current_date()
+from .common import SessionMemo
 
 
 # ---------------------------------------------------------------------------
@@ -237,7 +233,7 @@ def dedup_by_key(
 # ---------------------------------------------------------------------------
 # Assembled derivation stage
 # ---------------------------------------------------------------------------
-_DERIVED_PROJECTION_CACHE: dict = {}
+_DERIVED_PROJECTIONS = SessionMemo()
 
 
 def with_derived_columns(df: DataFrame, as_of: Column) -> DataFrame:
@@ -249,25 +245,11 @@ def with_derived_columns(df: DataFrame, as_of: Column) -> DataFrame:
     is a single ``withColumns``). Ordering mirrors the reference pipeline
     (`src/transformer.py:74-104`).
 
-    The Column trees are a pure function of (columns, as_of expression),
-    so they are memoized per application — same pattern and reason as
-    ``plans.shipment.clean_columns``.
-
-    Cache-key caveat (ADVICE r10): the as_of fingerprint is
-    ``str(as_of)``, and classic PySpark Column repr is not injective
-    (``F.lit("x")`` and ``F.col("x")`` can both render ``Column<'x'>``).
-    Pass ``as_of`` as a self-describing literal expression —
-    ``F.lit("2024-01-01").cast("date")`` / ``F.current_date()`` — never
-    a bare single-name ``F.col(...)`` that could collide with a
-    same-named literal; all in-repo callers do.
+    The Column trees are memoized by (columns, ``str(as_of)``) in a
+    ``SessionMemo``, whose docstring says how to pass ``as_of``.
     """
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        tuple(df.columns),
-        str(as_of),
-    )
-    cached = _DERIVED_PROJECTION_CACHE.get(cache_key)
-    if cached is None:
+
+    def build() -> tuple:
         c = F.col
         optimal = {
             "optimal_ata_dp_date": optimal_ata_dp(
@@ -308,9 +290,9 @@ def with_derived_columns(df: DataFrame, as_of: Column) -> DataFrame:
             "source_group": group,
             "source_month_tag": tag,
         }
-        cached = (optimal, rest)
-        while len(_DERIVED_PROJECTION_CACHE) >= 8:  # bound: evict oldest
-            _DERIVED_PROJECTION_CACHE.pop(next(iter(_DERIVED_PROJECTION_CACHE), None), None)
-        _DERIVED_PROJECTION_CACHE[cache_key] = cached
-    optimal, rest = cached
+        return optimal, rest
+
+    optimal, rest = _DERIVED_PROJECTIONS.get(
+        df.sparkSession, (tuple(df.columns), str(as_of)), build
+    )
     return df.withColumns(optimal).withColumns(rest)

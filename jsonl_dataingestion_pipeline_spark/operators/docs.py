@@ -21,10 +21,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import nonblank
+from .common import SessionMemo
 
 _METADATA_EXCLUDED = ("carr_eqp_uid", "consignee_raw", "combined_content")
 
-_DOC_PROJECTION_CACHE: dict = {}
+_DOC_PROJECTIONS = SessionMemo()
 
 
 def normalize_documents(
@@ -45,20 +46,24 @@ def normalize_documents(
     ``legacy_repr_consignee_code=True`` to get that exact string form.
 
     The output projection (dominated by the ~100-field metadata struct)
-    is a pure function of (columns, flags) and memoized per application —
-    same pattern/reason as ``plans.shipment.clean_columns``.
+    is memoized by (columns, flags) in a ``SessionMemo``.
     """
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        tuple(df.columns),
-        tuple(id_fallback_order) if id_fallback_order is not None else None,
-        with_doc_index_fallback,
-        legacy_repr_consignee_code,
+    columns = tuple(df.columns)
+    order = tuple(id_fallback_order) if id_fallback_order is not None else None
+    flags = (order, with_doc_index_fallback, legacy_repr_consignee_code)
+    projection = _DOC_PROJECTIONS.get(
+        df.sparkSession, (columns, *flags), lambda: _doc_projection(columns, *flags)
     )
-    cached = _DOC_PROJECTION_CACHE.get(cache_key)
-    if cached is not None:
-        return df.select(*cached)
-    cols = set(df.columns)
+    return df.select(*projection)
+
+
+def _doc_projection(
+    columns: Sequence[str],
+    id_fallback_order: Optional[Sequence[str]],
+    with_doc_index_fallback: bool,
+    legacy_repr_consignee_code: bool,
+) -> list:
+    cols = set(columns)
 
     def opt(name: str):
         return nonblank(F.col(f"`{name}`")) if name in cols else F.lit(None).cast("string")
@@ -96,7 +101,7 @@ def normalize_documents(
 
     metadata_fields = [
         F.col(f"`{c}`").alias(c)
-        for c in df.columns
+        for c in columns
         if c not in _METADATA_EXCLUDED and c != "consignee_codes"
     ]
     metadata = F.struct(*metadata_fields, codes.alias("consignee_codes"))
@@ -112,15 +117,4 @@ def normalize_documents(
             else []
         ),
     ]
-    while len(_DOC_PROJECTION_CACHE) >= 8:  # bound: evict oldest entry
-        # race-tolerant (ADVICE r10): a concurrent evictor may have
-        # emptied the dict between len() and here
-        _DOC_PROJECTION_CACHE.pop(next(iter(_DOC_PROJECTION_CACHE), None), None)
-    _DOC_PROJECTION_CACHE[cache_key] = projection
-    return df.select(*projection)
-
-
-def validate_documents(df: DataFrame) -> DataFrame:
-    """Writer-side validation (`src/writer.py:277-295`) as a filter:
-    documents must carry a non-null id; returns the valid subset."""
-    return df.filter(F.col("document_id").isNotNull())
+    return projection

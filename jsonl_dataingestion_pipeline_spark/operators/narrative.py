@@ -16,7 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import nonblank
-from ..functions.dates import fmt_display, fmt_iso
+from ..functions.dates import fmt_iso
+from .common import SessionMemo
 
 
 def _opt(cond: Column, *parts: Column | str) -> Column:
@@ -414,23 +415,14 @@ def milestones(df_cols: dict[str, Column], as_of: Column) -> Column:
     return F.concat_ws(" || ", header, leg1, leg2, leg3, leg4, leg5)
 
 
-_MILESTONES_CACHE: dict = {}
+_MILESTONES = SessionMemo()
 
 
 def with_milestones(df: DataFrame, as_of: Column) -> DataFrame:
-    # The T6 narrative is a ~300-node Column tree; construction is pure
-    # py4j chatter determined by (schema, as_of expression), so the tree
-    # is memoized per Spark application — see content.combined_content.
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        tuple(df.columns),
-        str(as_of),
-    )
-    col = _MILESTONES_CACHE.get(cache_key)
-    if col is None:
-        cols = {name: F.col(f"`{name}`") for name in df.columns}
-        col = milestones(cols, as_of)
-        while len(_MILESTONES_CACHE) >= 8:  # bound: evict oldest entry
-            _MILESTONES_CACHE.pop(next(iter(_MILESTONES_CACHE), None), None)
-        _MILESTONES_CACHE[cache_key] = col
+    # The T6 narrative is a ~300-node Column tree, memoized by (schema,
+    # as_of expression) in a SessionMemo
+    def build() -> Column:
+        return milestones({name: F.col(f"`{name}`") for name in df.columns}, as_of)
+
+    col = _MILESTONES.get(df.sparkSession, (tuple(df.columns), str(as_of)), build)
     return df.withColumn("milestones", col)

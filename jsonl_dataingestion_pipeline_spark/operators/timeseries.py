@@ -212,7 +212,8 @@ def rolling_stats(
     order, so a DOUBLE sum's rounding error is partition-order-
     dependent and a mean rounded off-grid at ``scale`` can flip its
     last digit (the r10 q20 failure class). With ``value_grid`` the
-    only float arithmetic is one division chain + round per row.
+    only float arithmetic is one division chain + round per row. The
+    divisor is the frame's non-null value count, as in ``F.avg``.
     ``roll_std`` keeps the float path (its consumers are audit-only) —
     don't compare it cross-engine at full precision.
 
@@ -232,7 +233,7 @@ def rolling_stats(
         mean = F.round(
             F.sum(vu).over(w).cast("double")
             / F.lit(g)
-            / F.count(F.lit(1)).over(w).cast("double"),
+            / F.count(value_col).over(w).cast("double"),
             scale,
         )
     else:

@@ -21,6 +21,7 @@ from ..functions.consignee import consignee_codes_list, extract_consignee_name
 from ..functions.dates import parse_date_dayfirst, parse_multi_dates
 from ..operators import content as content_op
 from ..operators import narrative
+from ..operators.common import SessionMemo, parallelism_floor
 from ..operators.derivations import dedup_by_key, with_derived_columns
 from ..operators.docs import normalize_documents
 from ..operators.summaries import (
@@ -32,7 +33,6 @@ from ..operators.summaries import (
 )
 from ..schema import (
     BOOLEAN_COLUMNS,
-    CANONICAL_COLUMNS,
     DATE_COLUMNS,
     DROP_COLUMNS_AFTER_LOAD,
     ID_COLUMNS,
@@ -51,7 +51,7 @@ def _as_of_col(as_of: AsOf) -> Column:
     return F.lit(str(as_of)).cast("date")
 
 
-_CLEAN_PROJECTION_CACHE: dict = {}
+_CLEAN_PROJECTIONS = SessionMemo()
 
 
 def clean_columns(df: DataFrame) -> DataFrame:
@@ -62,87 +62,72 @@ def clean_columns(df: DataFrame) -> DataFrame:
     the list-producing multi-ID split (F6) adopted from the legacy
     transformer per SURVEY.md §7.3.2.
 
-    The ~100 cleaning expressions are a pure function of the column list,
-    so the projection is memoized per (Spark application, columns) —
-    building it is ~2.5 s of py4j round-trips otherwise (driver-side,
-    data-independent; see operators/content.py for the same pattern).
+    The ~100 cleaning expressions are memoized by column list in a
+    ``SessionMemo``.
     """
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        tuple(df.columns),
-    )
-    cached = _CLEAN_PROJECTION_CACHE.get(cache_key)
-    if cached is not None:
-        return df.select(*cached)
-    multi_dates = set(MULTI_VALUED_DATE_COLS)
-    multi_ids = set(MULTI_VALUED_ID_COLS)
-    booleans = set(BOOLEAN_COLUMNS)
-    dates = set(DATE_COLUMNS)
-    ids = set(ID_COLUMNS)
 
-    projection = []
-    for name in df.columns:
-        c = F.col(f"`{name}`")
-        if name in dates and name in multi_dates:
-            expr = parse_multi_dates(clean_string(c))
-        elif name in dates:
-            expr = parse_date_dayfirst(clean_string(c))
-        elif name in booleans:
-            expr = coerce_boolean(c)
-        elif name in multi_ids:
-            expr = split_multi_ids(ensure_str_id(clean_string(c)))
-        elif name in ids:
-            expr = ensure_str_id(clean_string(c))
-        else:
-            expr = clean_string(c)
-        projection.append(expr.alias(name))
-    while len(_CLEAN_PROJECTION_CACHE) >= 8:  # bound: evict oldest entry
-        _CLEAN_PROJECTION_CACHE.pop(next(iter(_CLEAN_PROJECTION_CACHE), None), None)
-    _CLEAN_PROJECTION_CACHE[cache_key] = projection
-    return df.select(*projection)
+    def build() -> list:
+        multi_dates = set(MULTI_VALUED_DATE_COLS)
+        multi_ids = set(MULTI_VALUED_ID_COLS)
+        booleans = set(BOOLEAN_COLUMNS)
+        dates = set(DATE_COLUMNS)
+        ids = set(ID_COLUMNS)
+        projection = []
+        for name in df.columns:
+            c = F.col(f"`{name}`")
+            if name in dates and name in multi_dates:
+                expr = parse_multi_dates(clean_string(c))
+            elif name in dates:
+                expr = parse_date_dayfirst(clean_string(c))
+            elif name in booleans:
+                expr = coerce_boolean(c)
+            elif name in multi_ids:
+                expr = split_multi_ids(ensure_str_id(clean_string(c)))
+            elif name in ids:
+                expr = ensure_str_id(clean_string(c))
+            else:
+                expr = clean_string(c)
+            projection.append(expr.alias(name))
+        return projection
+
+    return df.select(*_CLEAN_PROJECTIONS.get(df.sparkSession, tuple(df.columns), build))
 
 
-_CONSIGNEE_PROJECTION_CACHE: dict = {}
+_CONSIGNEE_PROJECTIONS = SessionMemo()
 
 
 def with_consignee(df: DataFrame) -> DataFrame:
     """F7/F8 — consignee_name + consignee_codes list from consignee_raw.
 
-    Column trees memoized per application (same pattern/reason as
-    ``clean_columns``).
+    Column trees memoized in a ``SessionMemo``.
     """
     if "consignee_raw" not in df.columns:
         return df
-    cache_key = df.sparkSession.sparkContext.applicationId
-    cols = _CONSIGNEE_PROJECTION_CACHE.get(cache_key)
-    if cols is None:
+
+    def build() -> dict:
         src = F.col("consignee_raw")
-        cols = {
+        return {
             "consignee_name": extract_consignee_name(src),
             "consignee_codes": consignee_codes_list(src),
         }
-        while len(_CONSIGNEE_PROJECTION_CACHE) >= 8:  # bound: evict oldest
-            _CONSIGNEE_PROJECTION_CACHE.pop(next(iter(_CONSIGNEE_PROJECTION_CACHE), None), None)
-        _CONSIGNEE_PROJECTION_CACHE[cache_key] = cols
-    return df.withColumns(cols)
+
+    return df.withColumns(_CONSIGNEE_PROJECTIONS.get(df.sparkSession, None, build))
 
 
-_SUMMARY_PROJECTION_CACHE: dict = {}
+_SUMMARY_PROJECTIONS = SessionMemo()
 
 
 def with_summaries(df: DataFrame, as_of: Column) -> DataFrame:
     """T1-T5 summary columns.
 
-    Column trees memoized per (application, as_of expression) — they read
-    a fixed set of column names, so the input schema does not shape them.
-    Same pattern/reason as ``clean_columns``.
+    Column trees memoized by ``as_of`` in a
+    ``SessionMemo``; they read a fixed set of
+    column names, so the input schema does not shape them.
     """
-    cache_key = (df.sparkSession.sparkContext.applicationId, str(as_of))
-    cols = _SUMMARY_PROJECTION_CACHE.get(cache_key)
-    if cols is not None:
-        return df.withColumns(cols)
-    c = F.col
-    cols = {
+
+    def build() -> dict:
+        c = F.col
+        return {
             "critical_dates_summary": critical_dates_summary(
                 place_of_receipt=c("place_of_receipt"),
                 load_port=c("load_port"),
@@ -182,11 +167,9 @@ def with_summaries(df: DataFrame, as_of: Column) -> DataFrame:
                 c("place_of_delivery"),
                 c("final_destination"),
             ),
-    }
-    while len(_SUMMARY_PROJECTION_CACHE) >= 8:  # bound: evict oldest
-        _SUMMARY_PROJECTION_CACHE.pop(next(iter(_SUMMARY_PROJECTION_CACHE), None), None)
-    _SUMMARY_PROJECTION_CACHE[cache_key] = cols
-    return df.withColumns(cols)
+        }
+
+    return df.withColumns(_SUMMARY_PROJECTIONS.get(df.sparkSession, str(as_of), build))
 
 
 def transform_shipments(
@@ -207,8 +190,6 @@ def transform_shipments(
     # row); pipelined into a few-split scan it runs on that few tasks.
     # Repartition to defaultParallelism only when the input has fewer
     # partitions — a no-op on a real many-split scan.
-    from ..operators.common import parallelism_floor
-
     df = parallelism_floor(df)
     out = clean_columns(df)
     if dedup_key:

@@ -949,13 +949,12 @@ def test_fuzzy_decontaminate_memo_evicts_lru_not_all(spark):
     entry past capacity instead of clearing every memoized census."""
     from jsonl_dataingestion_pipeline_spark.operators import curation as cu
 
-    saved = dict(cu._CAP_MEMO)
-    cu._CAP_MEMO.clear()
+    saved = dict(cu._CAP_MEMO._entries)
+    cu._CAP_MEMO._entries.clear()
     try:
-        # fill past capacity with synthetic entries
+        # fill to capacity with synthetic entries
         for i in range(257):
-            cu._CAP_MEMO[("k", i)] = (i, None)
-        # touch the oldest so it becomes most-recent
+            cu._CAP_MEMO.get(spark, ("k", i), lambda i=i: (i, None))
         bench = spark.createDataFrame(
             [(1, "alpha beta gamma delta epsilon zeta")],
             "id long, text string",
@@ -970,13 +969,14 @@ def test_fuzzy_decontaminate_memo_evicts_lru_not_all(spark):
         # one real entry appended; only the OLDEST synthetic entries
         # were evicted to make room (cap is exactly 256) — the memo
         # never collapsed to 1
-        assert len(cu._CAP_MEMO) == 256
-        assert ("k", 0) not in cu._CAP_MEMO
-        assert ("k", 1) not in cu._CAP_MEMO
-        assert ("k", 256) in cu._CAP_MEMO
+        keys = {key for _, key in cu._CAP_MEMO._entries}
+        assert len(cu._CAP_MEMO._entries) == 256
+        assert ("k", 0) not in keys
+        assert ("k", 1) not in keys
+        assert ("k", 256) in keys
     finally:
-        cu._CAP_MEMO.clear()
-        cu._CAP_MEMO.update(saved)
+        cu._CAP_MEMO._entries.clear()
+        cu._CAP_MEMO._entries.update(saved)
 
 
 class TestDuplicateSubstringSpans:

@@ -3,11 +3,14 @@
 Catches registration mistakes (missing oracle, missing shape, SQL that
 DuckDB cannot even bind) in seconds, long before the full gate runs.
 
-The DYNAMIC half of the gate contract lives in
-tests/test_determinism.py (VERDICT r6 item 1): the ANN batteries are
-re-run across shuffle layouts with retraining forced and must produce
-bit-identical multisets, and the two recall audits carry measured-band (0.85/0.9)
-floors on their planted corpora.
+The DYNAMIC half of the gate contract is the value-hash comparison of
+every battery against its DuckDB oracle (tools/check_correctness.py);
+that is also the only gate on the ANN batteries and the q170/q171
+recall audits today. tests/test_determinism.py fuzzes the input
+partitioning of the cross-row sums, and tests/test_pq.py and
+tests/test_scale_operators.py hold operator-level recall floors. The
+ANN shuffle-layout rerun and the 0.85/0.9 recall-audit floors were
+deleted and are not restored yet (see ROADMAP.md).
 """
 from __future__ import annotations
 

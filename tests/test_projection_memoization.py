@@ -1,13 +1,18 @@
-"""The per-application projection caches added in round 10
-(derivations/_DERIVED_PROJECTION_CACHE, shipment summary/consignee
-caches, docs/_DOC_PROJECTION_CACHE) must be invisible: a cache hit
-returns the same rows as a fresh build, and the keys must discriminate
-every input that shapes the trees (as_of, flags)."""
+"""The shipment stages memoize their Column trees in ``SessionMemo``
+instances (clean, consignee, derived, summaries, milestones, content,
+documents). The memos must be invisible: a hit returns the same rows as
+a fresh build, and the keys must discriminate every input that shapes
+the trees (as_of, flags). A warm run on a same-schema frame must build
+no tree at all, since the per-call cost of ``run_batch`` depends on it."""
 
 from __future__ import annotations
 
+from jsonl_dataingestion_pipeline_spark.operators.common import SessionMemo
 from jsonl_dataingestion_pipeline_spark.operators.docs import normalize_documents
-from jsonl_dataingestion_pipeline_spark.plans.shipment import transform_shipments
+from jsonl_dataingestion_pipeline_spark.plans.shipment import (
+    build_documents,
+    transform_shipments,
+)
 
 from test_pipeline import AS_OF, FULL_ROW
 
@@ -49,3 +54,30 @@ def test_doc_flags_are_part_of_the_cache_key(shipment_df_factory):
     without = normalize_documents(derived, with_doc_index_fallback=False).first()
     assert with_fallback["document_id"].startswith("doc_")
     assert without["document_id"] is None
+
+
+def test_warm_run_builds_no_tree(shipment_df_factory, monkeypatch):
+    def run():
+        docs = build_documents(
+            transform_shipments(shipment_df_factory([FULL_ROW]), as_of=AS_OF)
+        )
+        return _rows(docs)
+
+    cold = run()
+    consulted, built = set(), []
+    real_get = SessionMemo.get
+
+    def counting_get(self, spark, key, build):
+        consulted.add(id(self))
+
+        def counted():
+            built.append(key)
+            return build()
+
+        return real_get(self, spark, key, counted)
+
+    monkeypatch.setattr(SessionMemo, "get", counting_get)
+    assert run() == cold
+    assert built == []
+    # clean, consignee, derived, summaries, milestones, content, documents
+    assert len(consulted) == 7

@@ -218,3 +218,34 @@ def test_rolling_std_matches_statistics(spark):
     }
     assert out[0] is None  # single-row frame
     assert out[4] == round(statistics.stdev([2, 4, 4, 4, 5]), 6)
+
+
+def test_rolling_grid_mean_skips_null_values(spark):
+    """A NULL value is left out of the value_grid mean's divisor, as
+    F.avg leaves it out; roll_n still counts every event in the frame."""
+    import datetime as dt
+
+    from jsonl_dataingestion_pipeline_spark.operators.timeseries import (
+        rolling_stats,
+    )
+
+    T = lambda m: dt.datetime(2024, 1, 1, 0, m)
+    rows = [
+        (1, "k", T(0), 1.25),
+        (2, "k", T(1), None),
+        (3, "k", T(2), 3.5),
+        (4, "j", T(0), None),
+    ]
+    df = spark.createDataFrame(rows, "id long, k string, ts timestamp, v double")
+
+    def stats(**kw):
+        return {
+            r.id: (r.roll_n, r.roll_mean)
+            for r in rolling_stats(df, "ts", "k", "v", window_seconds=600, **kw).collect()
+        }
+
+    grid = stats(value_grid=2)
+    assert grid == stats()
+    assert grid[2] == (2, 1.25)
+    assert grid[3] == (3, 2.375)
+    assert grid[4] == (1, None)
