@@ -50,6 +50,17 @@ def pipeline_break(df: DataFrame, reliable: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def release_break(df: DataFrame) -> None:
+    """Free the executor blocks a :func:`pipeline_break` frame holds.
+
+    The barrier's frame reads a ``LogicalRDD`` over the stored RDD;
+    unpersisting that RDD drops it from the block managers without
+    waiting. The frame cannot be read afterwards. A reliable
+    checkpoint's files stay in the checkpoint directory.
+    """
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def parallelism_floor(df: DataFrame) -> DataFrame:
     """Adaptive parallelism floor (optimization guide §2.5 input skew:
     "repartition immediately after the read").

@@ -10,18 +10,20 @@ with input splits at any scale.
 from __future__ import annotations
 
 import datetime as _dt
+import logging
+import time
 from typing import Optional, Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.arrays import split_multi_ids
-from ..functions.cleaning import clean_string, coerce_boolean, ensure_str_id
+from ..functions.cleaning import clean_string, coerce_boolean, ensure_str_id, nonblank
 from ..functions.consignee import consignee_codes_list, extract_consignee_name
 from ..functions.dates import parse_date_dayfirst, parse_multi_dates
 from ..operators import content as content_op
 from ..operators import narrative
-from ..operators.common import SessionMemo, parallelism_floor
+from ..operators.common import SessionMemo, parallelism_floor, pipeline_break, release_break
 from ..operators.derivations import dedup_by_key, with_derived_columns
 from ..operators.docs import normalize_documents
 from ..operators.summaries import (
@@ -39,6 +41,8 @@ from ..schema import (
     MULTI_VALUED_DATE_COLS,
     MULTI_VALUED_ID_COLS,
 )
+from ..sources import csv as csv_source
+from ..sources import jsonl as jsonl_sink
 
 AsOf = Union[None, str, _dt.date, Column]
 
@@ -220,59 +224,70 @@ def run_batch(
     strict_docs: bool = False,
     finalize_names: bool = False,
 ) -> dict:
-    """O1 — the production batch: scan -> transform -> docs -> JSONL sink.
+    """O1 — the production batch: scan -> transform -> docs -> JSONL sink, in one pass.
 
-    Returns per-stage wall-clock timings (reference logs the same brackets,
-    `src/pipeline.py:75-136`). Note Spark is lazy — "transform" time is
-    plan construction; execution cost lands in the write stage.
+    Spark is lazy, so ``ingest_plan`` and ``transform_plan`` only build
+    the plan. ``materialize`` runs it: the document frame is observed
+    (rows out, bad documents) and stored through one
+    :func:`pipeline_break`. ``write`` then reads the stored rows, so
+    neither the sink's file-size sample nor the write plans or runs the
+    transform again. The stored blocks are released before returning,
+    also when the run fails.
+
+    Returns one record (the reference logs the same brackets,
+    `src/pipeline.py:75-136`): wall seconds of ``ingest_plan``,
+    ``transform_plan``, ``materialize``, ``write`` and, with
+    ``finalize_names``, ``finalize``; and the observed ``rows_out`` and
+    ``bad_docs``.
 
     ``strict_docs`` mirrors the writer's strict mode
-    (`src/writer.py:291-295`): fail the run when any document has a blank
-    id or blank content. ``finalize_names`` applies the reference's
+    (`src/writer.py:291-295`): raise ``ValueError`` when any document has
+    a blank id or blank content. It reads the observed count, so it costs
+    no extra pass, and it raises before the write, so a failed run
+    publishes nothing. ``finalize_names`` applies the reference's
     ``<stem>_<tag>_<n>.jsonl`` naming (S7) after the write.
     """
-    import logging
-    import time
-
-    from pyspark.sql import functions as F
-
-    from ..sources.csv import read_shipment_csv
-    from ..sources.jsonl import finalize_filenames, write_documents
-
     log = logging.getLogger("jsonl_dataingestion_pipeline_spark")
-    timings: dict[str, float] = {}
+    record: dict = {}
 
     t0 = time.time()
-    raw = read_shipment_csv(spark, input_path, strict=strict)
-    timings["ingest_plan"] = round(time.time() - t0, 3)
+    raw = csv_source.read_shipment_csv(spark, input_path, strict=strict)
+    record["ingest_plan"] = round(time.time() - t0, 3)
 
     t0 = time.time()
     derived = transform_shipments(raw, as_of=as_of)
     docs = build_documents(derived)
-    timings["transform_plan"] = round(time.time() - t0, 3)
-
-    if strict_docs:
-        t0 = time.time()
-        bad = docs.filter(
-            F.col("document_id").isNull()
-            | (F.trim(F.col("document_id")) == "")
-            | (F.trim(F.col("content")) == "")
-        ).count()
-        timings["validate"] = round(time.time() - t0, 3)
-        if bad:
-            raise ValueError(
-                f"strict mode: {bad} document(s) with empty id/content"
-            )
+    metrics = Observation()
+    docs = docs.observe(
+        metrics,
+        F.count(F.lit(1)).alias("rows_out"),
+        F.count_if(
+            nonblank("document_id").isNull() | nonblank("content").isNull()
+        ).alias("bad_docs"),
+    )
+    record["transform_plan"] = round(time.time() - t0, 3)
 
     t0 = time.time()
-    write_documents(docs, output_path)
-    timings["write"] = round(time.time() - t0, 3)
+    stored = pipeline_break(docs)
+    try:
+        record.update(metrics.get)
+        record["materialize"] = round(time.time() - t0, 3)
+        if strict_docs and record["bad_docs"]:
+            raise ValueError(
+                f"strict mode: {record['bad_docs']} document(s) with empty id/content"
+            )
+
+        t0 = time.time()
+        jsonl_sink.write_documents(stored, output_path)
+        record["write"] = round(time.time() - t0, 3)
+    finally:
+        release_break(stored)
 
     if finalize_names:
         t0 = time.time()
-        renamed = finalize_filenames(spark, output_path)
-        timings["finalize"] = round(time.time() - t0, 3)
+        renamed = jsonl_sink.finalize_filenames(spark, output_path)
+        record["finalize"] = round(time.time() - t0, 3)
         log.info("renamed %d output files", len(renamed))
 
-    log.info("run_batch timings: %s", timings)
-    return timings
+    log.info("run_batch record: %s", record)
+    return record

@@ -71,6 +71,39 @@ def test_shipment_transform_is_shuffle_free(spark, shipment_df_factory):
     assert "Exchange" not in plan  # clean -> derive -> narrative: one stage
 
 
+def test_run_batch_scans_csv_once(spark, tmp_path):
+    """``run_batch`` runs the transform in ONE execution: the document
+    frame is stored once, and the sink's size sample and the write read
+    the stored rows. A second execution scanning the CSV means the
+    transform ran again."""
+    import csv
+
+    from jsonl_dataingestion_pipeline_spark.plans.shipment import run_batch
+    from jsonl_dataingestion_pipeline_spark.schema import SOURCE_HEADERS
+
+    src = tmp_path / "in.csv"
+    with open(src, "w", newline="", encoding="utf-8") as f:
+        w = csv.DictWriter(f, fieldnames=list(SOURCE_HEADERS), restval="")
+        w.writeheader()
+        for i in range(3):
+            w.writerow({"Job No.": f"J{i}", "ETD LP": f"0{i + 1}/01/2024"})
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    seen = {e.executionId() for e in executions()}
+    run_batch(spark, str(src), str(tmp_path / "out"), as_of="2024-06-01")
+    scans = [
+        e.description()
+        for e in executions()
+        if e.executionId() not in seen and "Scan csv" in e.physicalPlanDescription()
+    ]
+    assert len(scans) == 1, scans
+
+
 def test_deterministic_sample_is_narrow(spark):
     """Hash-keyed sampling must stay a pure filter: no shuffle, fused into
     the scan stage."""

@@ -1,5 +1,5 @@
 """S1 latest-file discovery, S7 filename finalization, F9 multi-consignee,
-strict doc validation, run_batch timings."""
+strict doc validation, the run_batch record, the sink's file cap."""
 
 from __future__ import annotations
 
@@ -13,10 +13,19 @@ from pyspark.sql import functions as F
 from jsonl_dataingestion_pipeline_spark.functions.consignee import (
     split_multi_consignee,
 )
+from jsonl_dataingestion_pipeline_spark.operators.common import (
+    pipeline_break,
+    release_break,
+)
+from jsonl_dataingestion_pipeline_spark.plans import shipment
 from jsonl_dataingestion_pipeline_spark.plans.shipment import run_batch
 from jsonl_dataingestion_pipeline_spark.schema import SOURCE_HEADERS
 from jsonl_dataingestion_pipeline_spark.sources.csv import find_latest_file
-from jsonl_dataingestion_pipeline_spark.sources.jsonl import finalize_filenames
+from jsonl_dataingestion_pipeline_spark.sources.jsonl import (
+    estimate_max_records_per_file,
+    finalize_filenames,
+    write_documents,
+)
 
 
 def _write_csv(path, rows):
@@ -43,14 +52,33 @@ def test_find_latest_file(tmp_path, spark):
     assert find_latest_file(spark, str(tmp_path), prefix="old") .endswith("old.csv")
 
 
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _blank_first_job(build):
+    """``build_documents`` with the content of job J1 blanked."""
+
+    def blanked(df):
+        docs = build(df)
+        return docs.withColumn(
+            "content",
+            F.when(F.col("document_id") == "J1", F.lit("")).otherwise(F.col("content")),
+        )
+
+    return blanked
+
+
 def test_run_batch_finalize_names_and_timings(tmp_path, spark):
     src = tmp_path / "in.csv"
     _write_csv(src, [{"Job No.": "J1", "ETD LP": "05/01/2024"}])
     out = tmp_path / "out"
-    timings = run_batch(
+    record = run_batch(
         spark, str(src), str(out), as_of="2024-06-01", finalize_names=True
     )
-    assert {"ingest_plan", "transform_plan", "write", "finalize"} <= set(timings)
+    phases = {"ingest_plan", "transform_plan", "materialize", "write", "finalize"}
+    assert phases <= set(record)
+    assert (record["rows_out"], record["bad_docs"]) == (1, 0)
     files = [p.name for p in out.rglob("shipment_*.jsonl")]
     assert files == ["shipment_202401_1.jsonl"]
     # re-run appends counters rather than clobbering names
@@ -61,17 +89,56 @@ def test_run_batch_finalize_names_and_timings(tmp_path, spark):
     assert again == []  # already finalized -> nothing left to rename
 
 
-def test_run_batch_strict_docs_raises(tmp_path, spark):
+def test_run_batch_strict_docs_passes_with_fallback_id_and_content(tmp_path, spark):
+    """A row with no id fields gets a ``doc_<n>`` id, and its content
+    falls back to the milestones text, so strict mode accepts it. The
+    stored documents are released when the run returns."""
     src = tmp_path / "in.csv"
-    # a row with no id fields at all still gets a doc_<n> id, so strict
-    # passes; force failure via empty content by... content always falls
-    # back to milestones, so strict content never fires for real rows.
     _write_csv(src, [{}])
     out = tmp_path / "out"
-    timings = run_batch(
+    before = _persisted_rdds(spark)
+    record = run_batch(
         spark, str(src), str(out), as_of="2024-06-01", strict_docs=True
     )
-    assert "validate" in timings
+    assert (record["rows_out"], record["bad_docs"]) == (1, 0)
+    assert list(out.rglob("*.json"))
+    assert _persisted_rdds(spark) == before
+
+
+def test_run_batch_strict_docs_raises_before_write(tmp_path, spark, monkeypatch):
+    monkeypatch.setattr(
+        shipment, "build_documents", _blank_first_job(shipment.build_documents)
+    )
+    src = tmp_path / "in.csv"
+    _write_csv(src, [{"Job No.": "J1"}, {"Job No.": "J2"}])
+    out = tmp_path / "out"
+    before = _persisted_rdds(spark)
+    with pytest.raises(ValueError, match="1 document"):
+        run_batch(spark, str(src), str(out), as_of="2024-06-01", strict_docs=True)
+    assert not out.exists()  # a strict failure publishes nothing
+    assert _persisted_rdds(spark) == before
+
+
+def test_write_documents_rolls_files_at_estimated_record_cap(tmp_path, spark):
+    """``maxRecordsPerFile`` from the size sample splits a group into
+    several files, none over the estimated record count."""
+    docs = pipeline_break(
+        spark.createDataFrame(
+            [(f"d{i}", "x" * 200, "2024-01" if i < 30 else "2024-02") for i in range(40)],
+            "document_id string, content string, source_group string",
+        ).coalesce(1)
+    )
+    try:
+        cap = 2000
+        per_file = estimate_max_records_per_file(docs, cap)
+        write_documents(docs, str(tmp_path / "out"), cap_file_bytes=cap)
+    finally:
+        release_break(docs)
+    files = list((tmp_path / "out" / "source_group=2024-01").glob("*.json"))
+    assert len(files) > 1
+    counts = [len(p.read_text().splitlines()) for p in files]
+    assert sum(counts) == 30
+    assert max(counts) <= per_file
 
 
 def test_write_documents_byte_capped(tmp_path, spark):

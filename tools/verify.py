@@ -11,7 +11,9 @@ Exit code 0 iff every stage passes. Stages:
      (row-count + schema + order-insensitive value multiset).
   2. pytest tests/test_plans.py — the plan-shape assertions backing
      SCALING.md (pushdown, broadcast, WindowGroupLimit, shuffle-free
-     transform, DPP, runtime Bloom filter, no-global-window centroids).
+     transform, DPP, runtime Bloom filter, no-global-window centroids),
+     and the one-scan guard: one ``run_batch`` call runs exactly one
+     SQL execution that scans the CSV.
   3. (--heavy) the shuffle-heavy dedup/similarity family at sf0.1.
   4. (--full) the whole pytest suite.
 """
