@@ -16,8 +16,9 @@ millions of rows at web scale, not trillions):
   feasible (30k affected-slice deltas, not 30k full recounts);
 - the merge itself is a narrow codegen array fold (greedy left-to-right
   non-overlapping, the BPE contract) — no shuffle;
-- lineage is cut with ``localCheckpoint`` every ``checkpoint_every``
-  merges so n_merges chained folds never blow up the analyzer.
+- lineage is cut with ``operators.common.pipeline_break`` every
+  ``checkpoint_every`` merges so n_merges chained folds never blow up
+  the analyzer.
 
 Driver traffic is one (a, b, count) row per merge — the same
 driver-scalar class as k-means centroids and PageRank's |V|.
@@ -29,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import tokens
+from .common import pipeline_break
 
 END = "</w>"  # word-end marker (lets word-final merges stay distinct)
 
@@ -112,20 +114,17 @@ def bpe_train(
     computed from the same arrays the full recount would scan) and
     differential-tested in ``tests/test_bpe.py``.
     """
-    frame = _word_frame(df, text_col, lowercase).localCheckpoint(
-        eager=True
-    )
+    frame = pipeline_break(_word_frame(df, text_col, lowercase))
     if not incremental:
         return _train_recount(
             frame, n_merges, min_count, checkpoint_every
         )
     # the ONLY full pair count of the whole run
-    counts = (
+    counts = pipeline_break(
         frame.filter(F.size(F.col("__s")) >= 2)
         .select("__cnt", F.explode(_pairs_of(F.col("__s"))).alias("__p"))
         .groupBy("__p")
         .agg(F.sum("__cnt").alias("__n"))
-        .localCheckpoint(eager=True)
     )
     merges: list = []
     for i in range(n_merges):
@@ -164,12 +163,11 @@ def bpe_train(
         # materialized pair-vocab-sized frame instead of re-running all
         # deltas since the last cut (pair vocab is bounded; the frame
         # checkpoint below stays amortized)
-        counts = (
+        counts = pipeline_break(
             counts.unionAll(delta)
             .groupBy("__p")
             .agg(F.sum("__n").alias("__n"))
             .filter(F.col("__n") > 0)
-            .localCheckpoint(eager=True)
         )
         # unaffected words keep their array untouched (no fold cost).
         # Lineage is cut EVERY merge here: the guarded merge references
@@ -179,9 +177,11 @@ def bpe_train(
         # JVM heap OOM at depth 8). The eager cut is one in-memory
         # vocab-sized pass with NO shuffle — the delta above stays the
         # only shuffled work per merge.
-        frame = frame.withColumn(
-            "__s", F.when(has, merged_syms).otherwise(F.col("__s"))
-        ).localCheckpoint(eager=True)
+        frame = pipeline_break(
+            frame.withColumn(
+                "__s", F.when(has, merged_syms).otherwise(F.col("__s"))
+            )
+        )
     return merges
 
 
@@ -208,7 +208,7 @@ def _train_recount(
         merges.append((a, b, int(n)))
         frame = frame.withColumn("__s", _merge_expr(F.col("__s"), a, b))
         if (i + 1) % checkpoint_every == 0:
-            frame = frame.localCheckpoint(eager=True)
+            frame = pipeline_break(frame)
     return merges
 
 
@@ -247,5 +247,5 @@ def bpe_segment(
             "__ws", F.transform(F.col("__ws"), _apply(a, b))
         )
         if (i + 1) % checkpoint_every == 0:
-            out = out.localCheckpoint(eager=True)
+            out = pipeline_break(out)
     return out.withColumn(out_col, F.flatten(F.col("__ws"))).drop("__ws")

@@ -1,11 +1,11 @@
 """Shared plan-shaping and integer-GD helpers used across operator
 modules.
 
-``pipeline_break`` started life private to :mod:`operators.dedup`; five
-other modules (similarity, vectorize, entity/traindata/webcorpus plans)
-grew to need the same barrier, so it lives here as the one public copy
-(ADVICE r7). ``operators.dedup._pipeline_break`` remains as an alias for
-the existing call sites.
+:func:`pipeline_break` is the package's one materialization barrier:
+every operator and plan that cuts lineage calls it, and the session's
+checkpoint directory decides whether the cut is local or reliable.
+:func:`release_break` frees what it stored, and :func:`stage_stats` is
+the per-stage summary the curation funnels report over their barriers.
 
 :class:`SessionMemo` is the one memoization policy for Column trees
 and per-frame censuses.
@@ -25,9 +25,10 @@ bit-for-bit unchanged.
 
 from __future__ import annotations
 
+import functools
 import threading
 from collections import OrderedDict
-from typing import Any, Callable, Hashable
+from typing import Any, Callable, Hashable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,29 +37,69 @@ from pyspark.sql import functions as F
 GD_GRID = 1e9
 
 
-def pipeline_break(df: DataFrame, reliable: bool = False) -> DataFrame:
+def pipeline_break(df: DataFrame) -> DataFrame:
     """Eager materialization barrier between pipeline stages.
 
-    ``localCheckpoint`` (default) stores blocks on the executors — fast,
-    but an executor loss mid-job kills the lineage and the job. On a real
-    cluster pass ``reliable=True`` to use a fault-tolerant ``checkpoint``
-    into ``spark.sparkContext.setCheckpointDir(...)`` storage (HDFS/object
-    store), which survives executor loss at the cost of one write+read.
+    The SparkContext's checkpoint directory picks the kind of barrier:
+
+    - set (``sparkContext.setCheckpointDir(...)``, an HDFS or object
+      store path on a cluster): a reliable ``checkpoint``. Its files
+      survive executor loss, at the cost of one write to that storage.
+    - unset: a ``localCheckpoint``. The blocks live on the executors,
+      which is fast, but losing an executor mid-job loses them.
+
+    Spark ML's ``checkpointInterval`` follows the same rule. The
+    directory is a deployment setting, so it is the one switch, and it
+    covers every barrier in the package. Either kind computes its input
+    once.
     """
-    if reliable:
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 
 
 def release_break(df: DataFrame) -> None:
-    """Free the executor blocks a :func:`pipeline_break` frame holds.
+    """Free what a :func:`pipeline_break` frame holds.
 
-    The barrier's frame reads a ``LogicalRDD`` over the stored RDD;
-    unpersisting that RDD drops it from the block managers without
-    waiting. The frame cannot be read afterwards. A reliable
-    checkpoint's files stay in the checkpoint directory.
+    The barrier's frame reads a ``LogicalRDD`` over the stored RDD.
+    Unpersisting that RDD drops its blocks from the block managers
+    without waiting; a reliable barrier's checkpoint files are deleted
+    through the Hadoop FileSystem API. The frame cannot be read
+    afterwards.
     """
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    rdd = df._jdf.queryExecution().logical().rdd()
+    rdd.unpersist(False)
+    files = rdd.getCheckpointFile()
+    if files.isDefined():
+        spark = df.sparkSession
+        path = spark._jvm.org.apache.hadoop.fs.Path(files.get())
+        path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
+
+
+def stage_stats(stages: Sequence[tuple[str, DataFrame]], id_col: str) -> DataFrame:
+    """Long-form per-stage summary of a funnel.
+
+    One row per ``(name, frame)`` in order: ``(stage INT, stage_name,
+    n_docs BIGINT, sum_ids BIGINT)``, where ``stage`` is the position in
+    ``stages``. Each row is one aggregate over its frame, so a stage
+    that ends in a :func:`pipeline_break` is counted from its stored
+    rows.
+    """
+    return functools.reduce(
+        DataFrame.unionAll,
+        [
+            df.agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum(id_col).cast("long").alias("sum_ids"),
+            ).select(
+                F.lit(stage).cast("int").alias("stage"),
+                F.lit(name).alias("stage_name"),
+                "n_docs",
+                "sum_ids",
+            )
+            for stage, (name, df) in enumerate(stages)
+        ],
+    )
 
 
 def parallelism_floor(df: DataFrame) -> DataFrame:

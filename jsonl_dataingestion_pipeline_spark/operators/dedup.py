@@ -31,6 +31,7 @@ from ..functions.expr import let as _let
 from ..functions.textstats import shingles as _shingles
 from ..functions.textstats import shingles_from_tokens as _shingles_from_tokens
 from ..functions.textstats import tokens as _tokens
+from .common import pipeline_break
 
 
 # ---------------------------------------------------------------------------
@@ -61,14 +62,6 @@ def exact_dedup(
         .agg(agg.alias(id_col))
     )
     return df.join(reps, on=id_col, how="leftsemi")
-
-
-# ---------------------------------------------------------------------------
-# Pipeline breaks
-# ---------------------------------------------------------------------------
-from jsonl_dataingestion_pipeline_spark.operators.common import (  # noqa: E402
-    pipeline_break as _pipeline_break,
-)
 
 
 def _cpu_floor_repartition(df: DataFrame, *cols: str) -> DataFrame:
@@ -115,7 +108,6 @@ def shingle_base(
     *,
     shingle_k: int = 3,
     strategy: str = "window",
-    reliable: bool = False,
 ) -> DataFrame:
     """Materialized ``(__id, __sh)`` distinct-shingle-set relation.
 
@@ -142,7 +134,7 @@ def shingle_base(
         # token split in its own projection: multi-referenced inside the
         # shingle transform lambda, where Catalyst does not CSE
         # (functions/expr.py)
-        return _pipeline_break(
+        return pipeline_break(
             df.select(
                 F.col(id_col).alias("__id"),
                 _tokens(F.col(text_col)).alias("__t"),
@@ -151,8 +143,7 @@ def shingle_base(
                 F.array_distinct(
                     _shingles_from_tokens(F.col("__t"), shingle_k)
                 ).alias("__sh"),
-            ),
-            reliable,
+            )
         )
 
     from pyspark.sql import Window
@@ -193,7 +184,7 @@ def shingle_base(
         )
     )
     long_docs = grams.groupBy("__id").agg(F.collect_set("s").alias("__sh"))
-    return _pipeline_break(long_docs.unionByName(short), reliable)
+    return pipeline_break(long_docs.unionByName(short))
 
 
 # ---------------------------------------------------------------------------
@@ -224,7 +215,6 @@ def _bucket_pairs(
     keys: Sequence[str],
     id_col: str,
     max_bucket: int,
-    reliable: bool,
     op_name: str,
 ) -> DataFrame:
     """Candidate pairs from capped buckets, memory-bounded end to end.
@@ -246,10 +236,9 @@ def _bucket_pairs(
     """
     kcols = [F.col(k) for k in keys]
     # consumed by both the histogram and the post-filter collect
-    exploded = _pipeline_break(exploded, reliable)
-    hist = _pipeline_break(
-        exploded.groupBy(*kcols).agg(F.count(F.lit(1)).alias("__n")),
-        reliable,
+    exploded = pipeline_break(exploded)
+    hist = pipeline_break(
+        exploded.groupBy(*kcols).agg(F.count(F.lit(1)).alias("__n"))
     )
     stats = (
         hist.filter(F.col("__n") > max_bucket)
@@ -356,7 +345,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     base: Optional[DataFrame] = None,
     max_bucket: Optional[int] = DEFAULT_MAX_BUCKET,
-    reliable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH with exact Jaccard verification.
 
@@ -381,9 +369,7 @@ def minhash_lsh_pairs(
     assert rows_per_band * bands == num_perm, "bands must divide num_perm"
 
     if base is None:
-        base = shingle_base(
-            df, text_col, id_col, shingle_k=shingle_k, reliable=reliable
-        )
+        base = shingle_base(df, text_col, id_col, shingle_k=shingle_k)
 
     # Signatures via explode + num_perm codegen'd min-aggregates. The
     # obvious alternative — nested transform() lambdas per row — runs
@@ -428,30 +414,28 @@ def minhash_lsh_pairs(
     if max_bucket is not None:
         # capped default: one groupBy-collect generates bucket pairs
         # directly (no histogram, no self-join), cap-bounded expansion
-        cand = _pipeline_break(
+        cand = pipeline_break(
             _bucket_pairs(
-                banded, ["band", "key"], "__id", max_bucket, reliable,
+                banded, ["band", "key"], "__id", max_bucket,
                 "minhash_lsh_pairs",
-            ),
-            reliable,
+            )
         )
     else:
         # uncapped-exact path: self-join spills where an unbounded
         # bucket array would not; materialize the band relation once
         # since both join sides consume it
-        banded = _pipeline_break(banded, reliable)
+        banded = pipeline_break(banded)
         left = banded.select(
             F.col("band"), F.col("key"), F.col("__id").alias("id_l")
         )
         right = banded.select(
             F.col("band"), F.col("key"), F.col("__id").alias("id_r")
         )
-        cand = _pipeline_break(
+        cand = pipeline_break(
             left.join(right, on=["band", "key"])
             .filter(F.col("id_l") < F.col("id_r"))
             .select("id_l", "id_r")
-            .dropDuplicates(["id_l", "id_r"]),
-            reliable,
+            .dropDuplicates(["id_l", "id_r"])
         )
 
     sh = base.select(F.col("__id"), F.col("__sh"))
@@ -477,7 +461,6 @@ def sampled_shingle_candidates(
     *,
     sample_hex_prefix: str = "0",
     max_bucket: Optional[int] = DEFAULT_MAX_BUCKET,
-    reliable: bool = False,
     op_name: str = "sampled_shingle_candidates",
 ) -> DataFrame:
     """Materialized candidate pairs (id_l < id_r) sharing a sampled
@@ -509,19 +492,17 @@ def sampled_shingle_candidates(
     if max_bucket is not None:
         # capped default: one groupBy-collect generates bucket pairs
         # directly (no histogram, no self-join), cap-bounded expansion
-        return _pipeline_break(
+        return pipeline_break(
             _bucket_pairs(
-                sampled, ["shash"], "__id", max_bucket, reliable, op_name
-            ),
-            reliable,
+                sampled, ["shash"], "__id", max_bucket, op_name
+            )
         )
-    return _pipeline_break(
+    return pipeline_break(
         sampled.alias("a")
         .join(sampled.alias("b"), on="shash")
         .filter(F.col("a.__id") < F.col("b.__id"))
         .select(F.col("a.__id").alias("id_l"), F.col("b.__id").alias("id_r"))
-        .dropDuplicates(["id_l", "id_r"]),
-        reliable,
+        .dropDuplicates(["id_l", "id_r"])
     )
 
 
@@ -536,7 +517,6 @@ def ngram_jaccard_pairs(
     base: Optional[DataFrame] = None,
     candidates: Optional[DataFrame] = None,
     max_bucket: Optional[int] = DEFAULT_MAX_BUCKET,
-    reliable: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing a *sampled* shingle.
 
@@ -562,9 +542,7 @@ def ngram_jaccard_pairs(
     :func:`containment_pairs`) so candidate generation runs once.
     """
     if base is None:
-        base = shingle_base(
-            df, text_col, id_col, shingle_k=shingle_k, reliable=reliable
-        )
+        base = shingle_base(df, text_col, id_col, shingle_k=shingle_k)
     cand = (
         candidates
         if candidates is not None
@@ -572,7 +550,6 @@ def ngram_jaccard_pairs(
             base,
             sample_hex_prefix=sample_hex_prefix,
             max_bucket=max_bucket,
-            reliable=reliable,
             op_name="ngram_jaccard_pairs",
         )
     )
@@ -601,7 +578,6 @@ def containment_pairs(
     base: Optional[DataFrame] = None,
     candidates: Optional[DataFrame] = None,
     max_bucket: Optional[int] = DEFAULT_MAX_BUCKET,
-    reliable: bool = False,
 ) -> DataFrame:
     """ASYMMETRIC containment pairs: C(A in B) = |sh(A) ∩ sh(B)| / |sh(A)|.
 
@@ -622,9 +598,7 @@ def containment_pairs(
     values rounded to 6.
     """
     if base is None:
-        base = shingle_base(
-            df, text_col, id_col, shingle_k=shingle_k, reliable=reliable
-        )
+        base = shingle_base(df, text_col, id_col, shingle_k=shingle_k)
     cand = (
         candidates
         if candidates is not None
@@ -632,7 +606,6 @@ def containment_pairs(
             base,
             sample_hex_prefix=sample_hex_prefix,
             max_bucket=max_bucket,
-            reliable=reliable,
             op_name="containment_pairs",
         )
     )
@@ -672,7 +645,6 @@ def connected_components(
     src_col: str = "id_l",
     dst_col: str = "id_r",
     max_iter: int = 25,
-    reliable: bool = False,
 ) -> DataFrame:
     """Label each node with the minimum id reachable through the edge set.
 
@@ -698,11 +670,10 @@ def connected_components(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionAll(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
     )
-    sym = _pipeline_break(sym.dropDuplicates(["a", "b"]), reliable)
+    sym = pipeline_break(sym.dropDuplicates(["a", "b"]))
 
-    labels = _pipeline_break(
-        nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("comp")),
-        reliable,
+    labels = pipeline_break(
+        nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("comp"))
     )
     for _ in range(max_iter):
         # neighbor labels: edge (a,b) sends comp(a) to b
@@ -719,15 +690,14 @@ def connected_components(
         jump = prop.select(
             F.col("id").alias("__jid"), F.col("comp").alias("__jcomp")
         )
-        new_labels = _pipeline_break(
+        new_labels = pipeline_break(
             prop.join(jump, on=prop["comp"] == jump["__jid"], how="left")
             .select(
                 "id",
                 F.least(
                     F.col("comp"), F.coalesce("__jcomp", "comp")
                 ).alias("comp"),
-            ),
-            reliable,
+            )
         )
         changed = (
             new_labels.join(
@@ -753,7 +723,6 @@ def incremental_connected_components(
     src_col: str = "id_l",
     dst_col: str = "id_r",
     max_iter: int = 25,
-    reliable: bool = False,
 ) -> DataFrame:
     """Fold a batch of new near-dup edges into an existing component
     labeling WITHOUT recomputing components from scratch — the
@@ -793,14 +762,14 @@ def incremental_connected_components(
         .unionAll(new_edges.select(F.col(dst_col).alias("id")))
         .distinct()
     )
-    batch_nodes = _pipeline_break(batch_nodes, reliable)
+    batch_nodes = pipeline_break(batch_nodes)
     # labels for batch vertices: base streams, batch broadcasts
     known = base.join(F.broadcast(batch_nodes), on="id", how="leftsemi")
-    known = _pipeline_break(known, reliable)
+    known = pipeline_break(known)
     fresh = batch_nodes.join(
         F.broadcast(known.select("id")), on="id", how="left_anti"
     ).select("id", F.col("id").alias("comp"))
-    batch_labels = _pipeline_break(known.unionAll(fresh), reliable)
+    batch_labels = pipeline_break(known.unionAll(fresh))
 
     lab_l = batch_labels.withColumnsRenamed(
         {"id": "__sl", "comp": "__cl"}
@@ -820,11 +789,10 @@ def incremental_connected_components(
     )
     merge_nodes = batch_labels.select(F.col("comp").alias("id")).distinct()
     mapping = connected_components(
-        merge_nodes, merge_edges,
-        max_iter=max_iter, reliable=reliable,
+        merge_nodes, merge_edges, max_iter=max_iter
     ).withColumnsRenamed({"id": "__old", "comp": "__new"})
     changed = mapping.filter(F.col("__old") != F.col("__new"))
-    changed = _pipeline_break(changed, reliable)
+    changed = pipeline_break(changed)
 
     def apply_mapping(labels: DataFrame) -> DataFrame:
         return labels.join(
@@ -844,14 +812,11 @@ def neardup_clusters(
     pairs: DataFrame,
     *,
     id_col: str = "id",
-    reliable: bool = False,
 ) -> DataFrame:
     """Duplicate clusters from a near-dup pair list:
     (component, n_members) for every component with >= 2 members. The
     component id doubles as the keep-representative (cluster min id)."""
-    comp = connected_components(
-        nodes, pairs, id_col=id_col, reliable=reliable
-    )
+    comp = connected_components(nodes, pairs, id_col=id_col)
     return (
         comp.groupBy("comp")
         .agg(F.count(F.lit(1)).cast("long").alias("n_members"))
@@ -864,15 +829,13 @@ def dedup_near_duplicates(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    *,
-    reliable: bool = False,
 ) -> DataFrame:
     """Drop every near-duplicate except its cluster representative.
 
     Keeps exactly one row (the min id) per connected component of the
     pair graph; rows untouched by any pair survive unchanged.
     """
-    comp = connected_components(df, pairs, id_col=id_col, reliable=reliable)
+    comp = connected_components(df, pairs, id_col=id_col)
     keep = comp.filter(F.col("id") == F.col("comp")).select(
         F.col("id").alias(id_col)
     )
@@ -884,8 +847,6 @@ def dedup_keep_best(
     pairs: DataFrame,
     id_col: str,
     score_col: str,
-    *,
-    reliable: bool = False,
 ) -> DataFrame:
     """Near-dup dedup that keeps the BEST row per cluster, not the
     min-id one: among each connected component of the pair graph the
@@ -898,7 +859,7 @@ def dedup_keep_best(
     (max over (score, -id) structs — deterministic, partial-aggregated
     map-side), one semi-join back. ``score_col`` must be numeric and
     non-null."""
-    comp = connected_components(df, pairs, id_col=id_col, reliable=reliable)
+    comp = connected_components(df, pairs, id_col=id_col)
     scored = df.select(
         F.col(id_col).alias("id"), F.col(score_col).alias("__s")
     ).join(comp, on="id")
@@ -1030,8 +991,8 @@ def with_simhash(
     """
     if id_col is not None:
         return simhash_agg(df, text_col, id_col, out_col=out_col)
-    stamped = _pipeline_break(
-        df.withColumn("__wsid", F.monotonically_increasing_id()), False
+    stamped = pipeline_break(
+        df.withColumn("__wsid", F.monotonically_increasing_id())
     )
     return simhash_agg(
         stamped, text_col, "__wsid", out_col=out_col
@@ -1101,7 +1062,6 @@ def incremental_dedup(
     shingle_k: int = 3,
     sample_hex_prefix: str = "0",
     threshold: float = 0.5,
-    reliable: bool = False,
 ) -> DataFrame:
     """Dedup an INCOMING batch against an already-curated BASE corpus —
     the production ingestion mode at scale: the base is never re-deduped,
@@ -1123,19 +1083,14 @@ def incremental_dedup(
         F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
     )
     base_keys = base.select(norm_key.alias("__ck")).distinct()
-    exact_kept = _pipeline_break(
+    exact_kept = pipeline_break(
         incoming.withColumn("__ck", norm_key)
         .join(base_keys, "__ck", "left_anti")
-        .drop("__ck"),
-        reliable,
+        .drop("__ck")
     )
 
-    bi = shingle_base(
-        exact_kept, text_col, id_col, shingle_k=shingle_k, reliable=reliable
-    )
-    bb = shingle_base(
-        base, text_col, id_col, shingle_k=shingle_k, reliable=reliable
-    )
+    bi = shingle_base(exact_kept, text_col, id_col, shingle_k=shingle_k)
+    bb = shingle_base(base, text_col, id_col, shingle_k=shingle_k)
 
     def _sampled(b: DataFrame, out_id: str) -> DataFrame:
         s = b.select(
@@ -1145,12 +1100,11 @@ def incremental_dedup(
             s = s.filter(F.col("shash").startswith(sample_hex_prefix))
         return s.dropDuplicates([out_id, "shash"])
 
-    cand = _pipeline_break(
+    cand = pipeline_break(
         _sampled(bi, "id_i")
         .join(_sampled(bb, "id_b"), "shash")
         .select("id_i", "id_b")
-        .dropDuplicates(["id_i", "id_b"]),
-        reliable,
+        .dropDuplicates(["id_i", "id_b"])
     )
     joined = (
         cand.join(

@@ -10,9 +10,8 @@ Spark-first shape: each iteration is one ``src``-keyed join (ranks are
 re-partitioned on the join key every round, so the edge relation's
 partitioning is reused) plus one ``dst``-keyed aggregation with map-side
 partial sums. Lineage is cut every ``checkpoint_every`` rounds
-(localCheckpoint; pass ``reliable=True`` on a real cluster for
-fault-tolerant checkpoints) so the plan does not grow unboundedly — the
-same discipline the dedup clustering loop uses.
+(``operators.common.pipeline_break``) so the plan does not grow
+unboundedly — the same discipline the dedup clustering loop uses.
 
 Determinism: every IEEE operation (divide, multiply, literal parse) is
 bit-identical across engines; ONLY the summation order of incoming
@@ -31,6 +30,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .common import pipeline_break
+
 
 def pagerank(
     edges: DataFrame,
@@ -41,7 +42,6 @@ def pagerank(
     damping: float = 0.85,
     scale: int = 9,
     checkpoint_every: int = 4,
-    reliable: bool = False,
     broadcast_ranks: bool = True,
     personalization: "Optional[Sequence]" = None,
 ) -> DataFrame:
@@ -72,15 +72,10 @@ def pagerank(
     Returns (node_id, rank) for every node appearing as src or dst,
     ranks rounded to ``scale`` decimals per iteration (see module note).
     """
-    def _break(d: DataFrame) -> DataFrame:
-        return d.checkpoint(eager=True) if reliable else d.localCheckpoint(
-            eager=True
-        )
-
     # materialize the STATIC relations once — every iteration consumes
     # them, and without the barrier each iteration's job would recompute
     # the whole upstream edge construction (measured 2-3x the loop cost)
-    e = _break(
+    e = pipeline_break(
         edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
     )
     # (node_id, __deg) in ONE exchange (optimization guide §2.4 "remove
@@ -91,7 +86,7 @@ def pagerank(
     # out-edges (the left-join semantics the loop depends on), so the
     # dangling set is exactly the __deg-IS-NULL slice — no separate
     # dangling frame or per-iteration leftsemi join needed.
-    nodes_deg = _break(
+    nodes_deg = pipeline_break(
         e.select(F.col("__src").alias("node_id"), F.lit(1).alias("__o"))
         .unionAll(e.select(F.col("__dst").alias("node_id"), F.lit(0)))
         .groupBy("node_id")
@@ -206,7 +201,7 @@ def pagerank(
             ).alias("rank"),
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = _break(ranks)
+            ranks = pipeline_break(ranks)
     return ranks.select("node_id", "rank")
 
 
@@ -336,10 +331,9 @@ def label_propagation(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    adj = (
+    adj = pipeline_break(
         e.select(F.col("a").alias("v"), F.col("b").alias("u"))
         .unionAll(e.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint(eager=True)
     )
     labels = adj.select("v").distinct().withColumn("label", F.col("v"))
     label_side = (
@@ -360,7 +354,7 @@ def label_propagation(
             ).getField("label").alias("label")
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < rounds:
-            labels = labels.localCheckpoint(eager=True)
+            labels = pipeline_break(labels)
     return labels.select(F.col("v").alias("node_id"), "label")
 
 
@@ -404,27 +398,24 @@ def bfs_distances(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    adj = (
+    adj = pipeline_break(
         e.select(F.col("a").alias("v"), F.col("b").alias("u"))
         .unionAll(e.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint(eager=True)
     )
-    dist = (
+    dist = pipeline_break(
         adj.select("v")
         .distinct()
         .filter(F.col("v").isin(list(sources)))
         .select("v", F.lit(0).cast("int").alias("dist"))
-        .localCheckpoint(eager=True)
     )
     frontier = dist.select("v")
     for depth in range(1, max_depth + 1):
-        new = (
+        new = pipeline_break(
             adj.join(frontier, on="v")
             .select(F.col("u").alias("v"))
             .distinct()
             .join(dist, on="v", how="left_anti")
             .select("v", F.lit(depth).cast("int").alias("dist"))
-            .localCheckpoint(eager=True)
         )
         if new.count() == 0:
             break
@@ -459,14 +450,13 @@ def k_core(
     the single surviving-edge count used for the convergence test;
     lineage is cut each round so the plan never nests. Deterministic:
     the k-core is unique (no tie-breaking exists to get wrong)."""
-    e = (
+    e = pipeline_break(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = e.count()
     converged = n == 0
@@ -481,11 +471,10 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("v")
-        e2 = (
+        e2 = pipeline_break(
             e.join(keep.withColumnRenamed("v", "a"), on="a", how="leftsemi")
             .join(keep.withColumnRenamed("v", "b"), on="b", how="leftsemi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
         n2 = e2.count()
         e = e2

@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .common import pipeline_break
+
 Codebooks = List[List[List[float]]]  # [m][n_codes][d/m]
 
 
@@ -267,9 +269,9 @@ def ivfpq_train(
     # without the checkpoint each scan would re-run the coarse
     # assignment argmin chain (values are identical either way — this
     # is purely a recompute cut)
-    res = _with_cell_residual(
-        df.select(id_col, vec_col), vec_col, coarse
-    ).localCheckpoint(eager=True)
+    res = pipeline_break(
+        _with_cell_residual(df.select(id_col, vec_col), vec_col, coarse)
+    )
     codebooks = pq_train(
         res, "__res", id_col,
         dim=dim, m=m, n_codes=n_codes, iterations=pq_iterations,

@@ -85,7 +85,7 @@ def bt_strengths(
         .distinct()
     )
     su = pipeline_break(
-        items.select("item", F.lit(0).cast("long").alias("__su")), False
+        items.select("item", F.lit(0).cast("long").alias("__su"))
     )
     for _ in range(int(iterations)):
         j = (
@@ -127,7 +127,7 @@ def bt_strengths(
         # state (the graph-family discipline, graph.py) — checkpoint
         # here, not persist: su is rebuilt each round, so layout reuse
         # buys nothing while unbounded lineage would
-        su = pipeline_break(su, False)
+        su = pipeline_break(su)
     comp.unpersist()
     return su.select("item", F.col("__su").alias(out_col))
 

@@ -21,6 +21,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .common import pipeline_break
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -236,7 +238,6 @@ def embedding_neardup_pairs(
     n_planes: int = 16,
     bands: int = 4,
     dim: int | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via sign-hash LSH.
 
@@ -275,22 +276,19 @@ def embedding_neardup_pairs(
             for b in range(bands)
         ]
     )
-    from .dedup import _pipeline_break
-
     # ids-only through the wide ops: band explode, self-join, and the
     # dropDuplicates shuffle never see an embedding vector
-    banded = _pipeline_break(
-        base.select("__id", F.explode(band_keys).alias("key")), reliable
+    banded = pipeline_break(
+        base.select("__id", F.explode(band_keys).alias("key"))
     )
 
     left = banded.select(F.col("key"), F.col("__id").alias("id_l"))
     right = banded.select(F.col("key"), F.col("__id").alias("id_r"))
-    cand = _pipeline_break(
+    cand = pipeline_break(
         left.join(right, on="key")
         .filter(F.col("id_l") < F.col("id_r"))
         .select("id_l", "id_r")
-        .dropDuplicates(["id_l", "id_r"]),
-        reliable,
+        .dropDuplicates(["id_l", "id_r"])
     )
 
     from .dedup import _cpu_floor_repartition
@@ -319,7 +317,6 @@ def semantic_dedup(
     threshold: float = 0.9,
     n_planes: int = 16,
     bands: int = 4,
-    reliable: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): rows whose embeddings are cosine-near-duplicates
@@ -345,9 +342,8 @@ def semantic_dedup(
         threshold=threshold,
         n_planes=n_planes,
         bands=bands,
-        reliable=reliable,
     )
-    return dedup_near_duplicates(corpus, pairs, id_col, reliable=reliable)
+    return dedup_near_duplicates(corpus, pairs, id_col)
 
 
 def cosine_pairs_exact(

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import word_counts
+from .common import pipeline_break
 
 #: Java-regex ``\s`` equivalent for the Python segmenter path, so the
 #: two halves of the operator tokenize identically (Java \s does NOT
@@ -127,9 +128,7 @@ def unigram_train(
     unconditionally (coverage), so the result has
     ``max(n_chars, vocab_size)`` entries — a corpus whose alphabet
     exceeds ``vocab_size`` keeps its alphabet."""
-    words = word_counts(
-        df, text_col, lowercase=lowercase
-    ).localCheckpoint(eager=True)
+    words = pipeline_break(word_counts(df, text_col, lowercase=lowercase))
 
     # ---- seed: one explode + one weighted count + one TakeOrdered
     subs = F.flatten(

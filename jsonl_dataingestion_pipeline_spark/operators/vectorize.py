@@ -120,9 +120,7 @@ def hashed_cosine_topk(
     # the dot-product join consume them, and a lazy plan re-runs the
     # tokenize/explode/aggregate subtree twice (measured ~2x wall at
     # the x100 tier)
-    corpus = pipeline_break(
-        hashed_tf_entries(df, text_col, id_col, dim=dim), False
-    )
+    corpus = pipeline_break(hashed_tf_entries(df, text_col, id_col, dim=dim))
     qent = hashed_tf_entries(query, text_col, id_col, dim=dim).select(
         "bucket", F.col("w").alias("__qw")
     )

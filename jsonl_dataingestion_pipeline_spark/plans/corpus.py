@@ -20,9 +20,8 @@ Scale shape: stages 1-3 are one narrow pass + one key-shuffle each;
 stage 4 is the banded/sampled near-dup machinery from
 ``operators/dedup.py`` (candidates only, never all-pairs); stage 5 is a
 broadcast of per-language rates. Stage boundaries are pipeline-broken
-(``localCheckpoint``; ``reliable=True`` for cluster-safe checkpoints)
-so the final frame's lineage stays shallow and stage stats don't
-recompute upstream work.
+(``operators.common.pipeline_break``) so the final frame's lineage
+stays shallow and stage stats don't recompute upstream work.
 """
 
 from __future__ import annotations
@@ -37,25 +36,18 @@ from jsonl_dataingestion_pipeline_spark.functions.sampling import (
 from jsonl_dataingestion_pipeline_spark.functions.textstats import (
     quality_score,
 )
+# the funnel's barriers go through this module-level name:
+# perfbench/workloads.py wraps it to time each stage in call order
+from jsonl_dataingestion_pipeline_spark.operators.common import (
+    pipeline_break as _pipeline_break,
+    stage_stats,
+)
 from jsonl_dataingestion_pipeline_spark.operators.curation import dedup_lines
 from jsonl_dataingestion_pipeline_spark.operators.dedup import (
-    _pipeline_break,
     dedup_near_duplicates,
     ngram_jaccard_pairs,
     shingle_base,
 )
-
-
-def _stage_stat(stage: int, name: str, df: DataFrame, id_col: str) -> DataFrame:
-    return df.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(id_col).cast("long").alias("sum_ids"),
-    ).select(
-        F.lit(stage).cast("int").alias("stage"),
-        F.lit(name).alias("stage_name"),
-        "n_docs",
-        "sum_ids",
-    )
 
 
 def curate_corpus(
@@ -73,7 +65,6 @@ def curate_corpus(
     alpha: float = 0.5,
     target_n: int = 300,
     seed: int = 7,
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Run the five-stage curation pipeline.
 
@@ -92,8 +83,7 @@ def curate_corpus(
         s0.withColumn("__ck", ck)
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__ck", "__rn"),
-        reliable,
+        .drop("__ck", "__rn")
     )
 
     # -- 2: composite quality filter (length / stopword / repetition).
@@ -130,15 +120,12 @@ def curate_corpus(
     s3 = _pipeline_break(
         deduped.filter(F.col("n_kept") >= 1)
         .join(s2.select(id_col, group_col), id_col)
-        .select(id_col, group_col, text_col),
-        reliable,
+        .select(id_col, group_col, text_col)
     )
 
     # -- 4: near-dup dedup (sampled-shingle Jaccard -> components ->
     # keep each cluster's min-id representative)
-    base = shingle_base(
-        s3, text_col, id_col, shingle_k=shingle_k, reliable=reliable
-    )
+    base = shingle_base(s3, text_col, id_col, shingle_k=shingle_k)
     pairs = ngram_jaccard_pairs(
         s3,
         text_col,
@@ -147,23 +134,23 @@ def curate_corpus(
         sample_hex_prefix=sample_hex_prefix,
         threshold=jaccard_threshold,
         base=base,
-        reliable=reliable,
     )
-    s4 = _pipeline_break(
-        dedup_near_duplicates(s3, pairs, id_col, reliable=reliable), reliable
-    )
+    s4 = _pipeline_break(dedup_near_duplicates(s3, pairs, id_col))
 
     # -- 5: temperature-balanced language mix
     s5 = temperature_sample(
         s4, group_col, id_col, alpha=alpha, target_n=target_n, seed=seed
     ).drop("keep_rate")
 
-    stats = (
-        _stage_stat(0, "input", s0, id_col)
-        .unionAll(_stage_stat(1, "exact_dedup", s1, id_col))
-        .unionAll(_stage_stat(2, "quality_filter", s2, id_col))
-        .unionAll(_stage_stat(3, "line_dedup", s3, id_col))
-        .unionAll(_stage_stat(4, "neardup_dedup", s4, id_col))
-        .unionAll(_stage_stat(5, "temperature_sample", s5, id_col))
+    stats = stage_stats(
+        [
+            ("input", s0),
+            ("exact_dedup", s1),
+            ("quality_filter", s2),
+            ("line_dedup", s3),
+            ("neardup_dedup", s4),
+            ("temperature_sample", s5),
+        ],
+        id_col,
     )
     return s5, stats

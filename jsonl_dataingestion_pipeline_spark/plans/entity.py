@@ -32,10 +32,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonl_dataingestion_pipeline_spark.operators.dedup import (
-    _pipeline_break,
-    connected_components,
-)
+from jsonl_dataingestion_pipeline_spark.operators.common import pipeline_break
+from jsonl_dataingestion_pipeline_spark.operators.dedup import connected_components
 from jsonl_dataingestion_pipeline_spark.operators.fuzzy import block_key
 from jsonl_dataingestion_pipeline_spark.operators.repair import golden_record
 
@@ -113,7 +111,6 @@ def resolve_entities(
     key_start: int = 1,
     key_length: int = 4,
     max_block: int | None = None,
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Resolve ``mentions`` into entities.
 
@@ -122,21 +119,17 @@ def resolve_entities(
     (entity + the majority-vote value of ``name_col`` and each attr).
     ``max_block``: skew guard forwarded to :func:`match_pairs`.
     """
-    m = _pipeline_break(
+    m = pipeline_break(
         mentions.select(
             F.col(id_col).alias("__mid"),
             F.col(name_col).alias("__mname"),
             block_key(name_col, key_start, key_length).alias("__bk"),
-        ),
-        reliable,
+        )
     )
-    pairs = _pipeline_break(
-        match_pairs(m, max_distance, max_block=max_block), reliable
-    )
+    pairs = pipeline_break(match_pairs(m, max_distance, max_block=max_block))
     comp = connected_components(
         m.select(F.col("__mid").alias("id")),
         pairs,
-        reliable=reliable,
     )
     assignments = comp.select(
         F.col("id").alias(id_col), F.col("comp").alias("entity")

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from jsonl_dataingestion_pipeline_spark.functions.textstats import (
     token_count,
 )
-from jsonl_dataingestion_pipeline_spark.operators.dedup import _pipeline_break
+from jsonl_dataingestion_pipeline_spark.operators.common import pipeline_break
 from jsonl_dataingestion_pipeline_spark.operators.packing import (
     pack_sequences,
 )
@@ -47,7 +47,6 @@ def export_training_data(
     seq_len: int = 512,
     n_shards: int = 16,
     seed: int = 7,
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Pack ``df`` into ``seq_len``-token training sequences and assign
     every sequence-bearing document a reproducible (shard, pos)
@@ -64,25 +63,22 @@ def export_training_data(
       sum, shard*1e6+pos sum) so the driver's oracle re-proves the
       whole composition, not just row counts.
     """
-    docs = _pipeline_break(
+    docs = pipeline_break(
         df.select(
             F.col(id_col),
             token_count(F.col(text_col)).cast("long").alias("n_tokens"),
-        ),
-        reliable,
+        )
     )
-    packed = _pipeline_break(
-        pack_sequences(docs, "n_tokens", id_col, seq_len=seq_len),
-        reliable,
+    packed = pipeline_break(
+        pack_sequences(docs, "n_tokens", id_col, seq_len=seq_len)
     )
-    sharded = _pipeline_break(
+    sharded = pipeline_break(
         shuffle_shards(
             packed.filter(F.col("n_seqs") > 0),
             id_col,
             n_shards=n_shards,
             seed=seed,
-        ),
-        reliable,
+        )
     )
 
     def row(stage, name, frame, n_expr, ck_expr):

@@ -18,8 +18,8 @@ oracle (q118).
 Scale shape: stages 1-3 are narrow codegen projections (zero shuffle);
 line dedup is the q84/q112 anti-join plan; exact dedup one key-shuffled
 window; the quota one domain-keyed WindowGroupLimit. Stage boundaries
-are pipeline-broken (localCheckpoint; ``reliable=True`` on a cluster)
-so per-stage stats never recompute upstream work.
+are pipeline-broken (``operators.common.pipeline_break``) so per-stage
+stats never recompute upstream work.
 """
 
 from __future__ import annotations
@@ -34,25 +34,18 @@ from jsonl_dataingestion_pipeline_spark.functions.web import (
     strip_html,
     url_host,
 )
+# the funnel's barriers go through this module-level name:
+# perfbench/workloads.py wraps it to time each stage in call order
+from jsonl_dataingestion_pipeline_spark.operators.common import (
+    pipeline_break as _pipeline_break,
+    stage_stats,
+)
 from jsonl_dataingestion_pipeline_spark.operators.curation import (
     c4_quality_filter,
     dedup_lines,
     gopher_quality_flags,
     normalized_line_key,
 )
-from jsonl_dataingestion_pipeline_spark.operators.dedup import _pipeline_break
-
-
-def _stage_stat(stage: int, name: str, df: DataFrame, id_col: str) -> DataFrame:
-    return df.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(id_col).cast("long").alias("sum_ids"),
-    ).select(
-        F.lit(stage).cast("int").alias("stage"),
-        F.lit(name).alias("stage_name"),
-        "n_docs",
-        "sum_ids",
-    )
 
 
 def extract_web_corpus(
@@ -68,7 +61,6 @@ def extract_web_corpus(
     line_key=normalized_line_key,
     max_per_domain: int = 50,
     seed: int = 0,
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Run the six-stage web-extraction funnel.
 
@@ -85,8 +77,7 @@ def extract_web_corpus(
             "text", strip_html(F.col(html_col), keep_line_breaks=True)
         )
         .filter(F.length("text") > 0)
-        .select(id_col, "domain", "text"),
-        reliable,
+        .select(id_col, "domain", "text")
     )
 
     # -- 2: C4 page cleaning; survivors carry the cleaned text
@@ -101,14 +92,13 @@ def extract_web_corpus(
         s1.join(
             c4.filter(F.col("c4_keep")).select(id_col, "c4_text"), id_col
         )
-        .select(id_col, "domain", F.col("c4_text").alias("text")),
-        reliable,
+        .select(id_col, "domain", F.col("c4_text").alias("text"))
     )
 
     # -- 3: Gopher quality rules on the cleaned text
     gp = gopher_quality_flags(s2, "text", id_col, **(gopher_params or {}))
     s3 = _pipeline_break(
-        s2.join(gp.filter(F.col("keep")).select(id_col), id_col), reliable
+        s2.join(gp.filter(F.col("keep")).select(id_col), id_col)
     )
 
     # -- 4: fuzzy boilerplate line removal (normalized keys), originals
@@ -123,8 +113,7 @@ def extract_web_corpus(
     s4 = _pipeline_break(
         ld.filter(F.col("n_kept") >= 1)
         .join(s3.select(id_col, "domain"), id_col)
-        .select(id_col, "domain", "text"),
-        reliable,
+        .select(id_col, "domain", "text")
     )
 
     # -- 5: exact dedup on normalized content, keep min id
@@ -134,8 +123,7 @@ def extract_web_corpus(
         s4.withColumn("__ck", ck)
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__ck", "__rn"),
-        reliable,
+        .drop("__ck", "__rn")
     )
 
     # -- 6: per-domain quota
@@ -143,13 +131,16 @@ def extract_web_corpus(
         s5, "domain", id_col, max_per_group=max_per_domain, seed=seed
     )
 
-    stats = (
-        _stage_stat(0, "input", s0, id_col)
-        .unionAll(_stage_stat(1, "html_extract", s1, id_col))
-        .unionAll(_stage_stat(2, "c4_clean", s2, id_col))
-        .unionAll(_stage_stat(3, "gopher_quality", s3, id_col))
-        .unionAll(_stage_stat(4, "fuzzy_line_dedup", s4, id_col))
-        .unionAll(_stage_stat(5, "exact_dedup", s5, id_col))
-        .unionAll(_stage_stat(6, "domain_quota", s6, id_col))
+    stats = stage_stats(
+        [
+            ("input", s0),
+            ("html_extract", s1),
+            ("c4_clean", s2),
+            ("gopher_quality", s3),
+            ("fuzzy_line_dedup", s4),
+            ("exact_dedup", s5),
+            ("domain_quota", s6),
+        ],
+        id_col,
     )
     return s6, stats

@@ -18,6 +18,22 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def checkpoint_dir(spark, tmp_path):
+    """Set the session's checkpoint directory, so every ``pipeline_break``
+    writes a reliable checkpoint under it (as ``<uuid>/rdd-<id>``); unset
+    it on teardown, so the session-scoped ``spark`` goes back to local
+    barriers. Yields the directory. A test that first runs with local
+    barriers asks for it mid-test with
+    ``request.getfixturevalue("checkpoint_dir")``."""
+    sc = spark.sparkContext
+    path = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(path))
+    yield path
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None
+
+
 _CANON_SCHEMA = ", ".join(f"`{c}` string" for c in CANONICAL_COLUMNS)
 
 

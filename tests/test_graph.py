@@ -222,6 +222,17 @@ class TestLabelPropagation:
         assert {out[v] for v in range(4)} == {0}
         assert {out[v + 10] for v in range(4)} == {10}
 
+    def test_checkpoint_dir_makes_barriers_reliable(self, spark, request):
+        """Once the session has a checkpoint directory, the adjacency
+        barrier is a reliable checkpoint written under it, and the
+        labels match the run with local barriers."""
+        k4a = [(a, b) for a in range(4) for b in range(4) if a < b]
+        edges = k4a + [(a + 10, b + 10) for a, b in k4a] + [(3, 10)]
+        local = self._lpa(spark, edges, rounds=4)
+        ckpt = request.getfixturevalue("checkpoint_dir")
+        assert self._lpa(spark, edges, rounds=4) == local
+        assert list(ckpt.rglob("rdd-*"))
+
     def test_tie_breaks_toward_smallest_label(self, spark):
         # star center 5 with leaves 1..4: round 1, the center sees four
         # distinct labels (count 1 each) -> adopts the SMALLEST (1);

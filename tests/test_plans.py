@@ -63,6 +63,34 @@ def test_make_centroids_no_global_window(spark):
     assert tree.index("TakeOrderedAndProject") > tree.index("Window")
 
 
+def test_one_barrier_policy():
+    """Only ``operators/common.py`` calls ``.localCheckpoint(`` or
+    ``.checkpoint(``, and no function takes a ``reliable`` parameter:
+    every barrier goes through ``pipeline_break``, whose one switch is
+    the session's checkpoint directory. An AST scan; no JVM."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "jsonl_dataingestion_pipeline_spark"
+    allowed = pkg / "operators" / "common.py"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        where = path.relative_to(pkg)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                path != allowed
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                found.append(f"{where}:{node.lineno} calls .{node.func.attr}(")
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                if "reliable" in [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]:
+                    found.append(f"{where}:{node.lineno} takes reliable")
+    assert found == []
+
+
 def test_shipment_transform_is_shuffle_free(spark, shipment_df_factory):
     from jsonl_dataingestion_pipeline_spark.plans.shipment import transform_shipments
 

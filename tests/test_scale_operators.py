@@ -231,20 +231,24 @@ def test_legacy_clean_string(spark):
     assert legacy == [None, None, None, "keep", None]
 
 
-def test_dedup_reliable_checkpoint_mode(tmp_path, spark):
-    """reliable=True routes pipeline breaks through the fault-tolerant
-    checkpoint dir; output must be identical to the local default."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_dedup_reliable_checkpoint_mode(spark, request):
+    """A checkpoint directory routes the pipeline breaks through
+    fault-tolerant checkpoints written under it; the pairs must be
+    identical to the run with local barriers."""
     df = spark.createDataFrame(
         [(i, f"common base text plus token{i} here for doc") for i in range(40)]
         + [(100 + i, f"common base text plus token{i} here for doc extra") for i in range(10)],
         "id long, text string",
     )
-    fast = minhash_lsh_pairs(df, "text", "id", threshold=0.3)
-    reliable = minhash_lsh_pairs(df, "text", "id", threshold=0.3, reliable=True)
-    a = sorted(map(tuple, fast.collect()))
-    b = sorted(map(tuple, reliable.collect()))
-    assert a == b and len(a) > 0
+
+    def pairs():
+        got = minhash_lsh_pairs(df, "text", "id", threshold=0.3).collect()
+        return sorted(map(tuple, got))
+
+    local = pairs()
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    assert pairs() == local and len(local) > 0
+    assert list(ckpt.rglob("rdd-*"))
 
 
 def test_connected_components_and_neardup_dedup(spark):

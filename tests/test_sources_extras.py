@@ -119,6 +119,55 @@ def test_run_batch_strict_docs_raises_before_write(tmp_path, spark, monkeypatch)
     assert _persisted_rdds(spark) == before
 
 
+def _spy_release(monkeypatch) -> list:
+    """Wrap ``run_batch``'s ``release_break`` to record the checkpoint
+    files each released barrier had on disk just before the release."""
+    seen = []
+
+    def spy(df):
+        files = df._jdf.queryExecution().logical().rdd().getCheckpointFile()
+        seen.append(files.get().split(":", 1)[-1] if files.isDefined() else None)
+        assert seen[-1] is None or os.path.isdir(seen[-1])
+        release_break(df)
+
+    monkeypatch.setattr(shipment, "release_break", spy)
+    return seen
+
+
+def test_run_batch_reliable_barrier_is_deleted(tmp_path, spark, request, monkeypatch):
+    """In a session with a checkpoint directory the stored documents are
+    a reliable checkpoint. The output is byte-identical to a run with a
+    local barrier, and the checkpoint files are gone when it returns."""
+    src = tmp_path / "in.csv"
+    _write_csv(src, [{"Job No.": f"J{i}", "ETD LP": "05/01/2024"} for i in range(5)])
+
+    def run(out):
+        run_batch(spark, str(src), str(out), as_of="2024-06-01", finalize_names=True)
+        return {str(p.relative_to(out)): p.read_bytes() for p in out.rglob("*.jsonl")}
+
+    local = run(tmp_path / "local")
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    seen = _spy_release(monkeypatch)
+    assert run(tmp_path / "reliable") == local and local
+    assert len(seen) == 1 and seen[0] is not None
+    assert not list(ckpt.rglob("rdd-*"))
+
+
+def test_run_batch_strict_failure_deletes_reliable_barrier(tmp_path, spark, checkpoint_dir, monkeypatch):
+    monkeypatch.setattr(
+        shipment, "build_documents", _blank_first_job(shipment.build_documents)
+    )
+    seen = _spy_release(monkeypatch)
+    src = tmp_path / "in.csv"
+    _write_csv(src, [{"Job No.": "J1"}, {"Job No.": "J2"}])
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="1 document"):
+        run_batch(spark, str(src), str(out), as_of="2024-06-01", strict_docs=True)
+    assert not out.exists()
+    assert len(seen) == 1 and seen[0] is not None
+    assert not list(checkpoint_dir.rglob("rdd-*"))
+
+
 def test_write_documents_rolls_files_at_estimated_record_cap(tmp_path, spark):
     """``maxRecordsPerFile`` from the size sample splits a group into
     several files, none over the estimated record count."""

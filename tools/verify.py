@@ -12,8 +12,10 @@ Exit code 0 iff every stage passes. Stages:
   2. pytest tests/test_plans.py — the plan-shape assertions backing
      SCALING.md (pushdown, broadcast, WindowGroupLimit, shuffle-free
      transform, DPP, runtime Bloom filter, no-global-window centroids),
-     and the one-scan guard: one ``run_batch`` call runs exactly one
-     SQL execution that scans the CSV.
+     the one-scan guard: one ``run_batch`` call runs exactly one
+     SQL execution that scans the CSV, and the JVM-free barrier
+     guard: only ``operators/common.py`` calls ``localCheckpoint`` /
+     ``checkpoint``, and no function takes a ``reliable`` flag.
   3. (--heavy) the shuffle-heavy dedup/similarity family at sf0.1.
   4. (--full) the whole pytest suite.
 """
