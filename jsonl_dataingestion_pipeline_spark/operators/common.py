@@ -172,6 +172,11 @@ class SessionMemo:
                 self._entries.popitem(last=False)
         return value
 
+    def clear(self) -> None:
+        """Drop every entry, in every application."""
+        with self._lock:
+            self._entries.clear()
+
 
 def fast_sigmoid(z: Column) -> Column:
     """``0.5 + 0.5*z/(1+|z|)`` — a rational sigmoid surrogate.

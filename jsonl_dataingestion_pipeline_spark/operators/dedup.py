@@ -13,8 +13,14 @@ Four families, each with a different cost/recall point:
                      express efficiently); near-dup = small Hamming
                      distance within LSH bit-band buckets.
 
-All hashing is md5-based so every step can be replayed by the DuckDB
-oracle at test scale.
+Plus the substring family (Lee et al. 2021): a 63-bit polynomial
+rolling-hash fingerprint of every k-char window, one census/probe
+pipeline against a stored fingerprint index, the full operators being
+that pipeline over an empty index.
+
+Content keys and sampling use md5; the substring fingerprint is pure
+integer arithmetic mod 2^63. Either way the DuckDB oracles replay every
+step at test scale.
 """
 
 from __future__ import annotations
@@ -23,7 +29,7 @@ import logging
 from typing import Optional, Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -107,7 +113,6 @@ def shingle_base(
     id_col: str,
     *,
     shingle_k: int = 3,
-    strategy: str = "window",
 ) -> DataFrame:
     """Materialized ``(__id, __sh)`` distinct-shingle-set relation.
 
@@ -118,34 +123,12 @@ def shingle_base(
     build this once and pass it to each — shingling the text is the
     single most expensive narrow step.
 
-    Two equivalent physical strategies (identical output sets):
-
-    - ``window``: posexplode tokens -> ``lead`` window -> ``collect_set``.
-      Every expression stays in whole-stage codegen; measured ~3.5x faster
-      than the narrow form on local[32]. Costs one shuffle of the token
-      stream (the window and the groupBy share the ``__id`` partitioning,
-      so the exchange is reused).
-    - ``narrow``: per-row higher-order ``transform`` — zero shuffle, but
-      HOF lambdas always run interpreted. Prefer when the corpus is so
-      wide that shuffling the token stream dominates (very long docs on a
-      bandwidth-bound cluster).
+    The shingles come from a posexplode of the tokens, a ``lead``
+    window and a ``collect_set``, so every expression stays in
+    whole-stage codegen. That costs one shuffle of the token stream:
+    the window and the groupBy share the ``__id`` partitioning, so the
+    exchange is reused.
     """
-    if strategy == "narrow":
-        # token split in its own projection: multi-referenced inside the
-        # shingle transform lambda, where Catalyst does not CSE
-        # (functions/expr.py)
-        return pipeline_break(
-            df.select(
-                F.col(id_col).alias("__id"),
-                _tokens(F.col(text_col)).alias("__t"),
-            ).select(
-                "__id",
-                F.array_distinct(
-                    _shingles_from_tokens(F.col("__t"), shingle_k)
-                ).alias("__sh"),
-            )
-        )
-
     from pyspark.sql import Window
 
     toks = _tokens(F.col(text_col))
@@ -1338,7 +1321,6 @@ def duplicate_substring_spans(
     k: int = 40,
     sample: int = 8,
     min_docs: int = 2,
-    fp_method: str = "rolling",
 ) -> DataFrame:
     """Cross-document duplicate SUBSTRING spans — the character-level
     dedup signal of Lee et al. 2021 ("Deduplicating Training Data Makes
@@ -1376,34 +1358,35 @@ def duplicate_substring_spans(
     Detection guarantee is probabilistic per CONTENT (not per
     occurrence): a duplicated region of length L >= k contains
     L - k + 1 windows and is missed only if none of them selects —
-    P(miss) = (1 - 1/sample)^(L-k+1) for md5-uniform content (k=40,
-    sample=8, L=120: ~2e-5), and deterministically: a given substring
-    either matches in EVERY document that contains it or in none
-    (selection is content-keyed), so the miss never splits a duplicate
-    group. md5 collisions (128-bit) are the usual content-key
-    assumption used repo-wide.
+    P(miss) = (1 - 1/sample)^(L-k+1) for uniformly hashed content
+    (k=40, sample=8, L=120: ~2e-5), and deterministically: a given
+    substring either matches in EVERY document that contains it or in
+    none (selection is content-keyed), so the miss never splits a
+    duplicate group. With ``sample=1`` every window is selected and the
+    spans are exact up to 63-bit fingerprint collisions.
 
-    100 TB shape: Scan -> Generate(positions) -> codegen md5 projection
-    -> the 1/sample filter — one streamed pass, O(corpus chars) rows
-    BEFORE the filter but never materialized (whole-stage codegen
-    pipelines Generate into the filter; only (id, p, fp) survive to the
-    exchange). Then one fp-keyed census (map-side combine), one
-    fp-keyed semi-join back, and one id-keyed window for the islands —
-    three bounded shuffles, no self-join, nothing quadratic. The
-    honest cost of substring-level dedup is the per-character
-    fingerprint pass; the suffix-array alternative is O(bytes) memory
-    on one machine.
+    This IS :func:`incremental_substring_spans` over an empty index:
+    the whole corpus is the batch. The empty index is a relation the
+    optimizer can see is empty, so ``PropagateEmptyRelation`` folds the
+    index join away and the plan is the batch-only census.
 
-    Determinism: md5 fingerprints, integer modulus selection, islands
-    over (id, position) total order — layout-independent end to end;
-    the q192 DuckDB oracle replays every stage bit-for-bit.
+    100 TB shape: Scan -> the Arrow rolling-hash kernel with the
+    1/sample filter inside it — one streamed pass; only the selected
+    (id, p, fp) rows leave the kernel. Then one fp-keyed census
+    (map-side combine), one fp-keyed join back, and one id-keyed
+    window for the islands — three bounded shuffles, no self-join,
+    nothing quadratic. The honest cost of substring-level dedup is the
+    per-character fingerprint pass; the suffix-array alternative is
+    O(bytes) memory on one machine.
+
+    Determinism: integer rolling-hash fingerprints, integer modulus
+    selection, islands over (id, position) total order —
+    layout-independent end to end; the q192 DuckDB oracle replays every
+    stage bit-for-bit.
     """
-    hits = _duplicate_positions(
-        df, id_col, text_col, k=k, sample=sample, min_docs=min_docs,
-        fp_method=fp_method,
-    )
-    return _position_islands(hits, k).select(
-        F.col("__id").alias(id_col), "s", "e"
+    return incremental_substring_spans(
+        df, _empty_fp_index(df.sparkSession, k=k, sample=sample),
+        id_col, text_col, k=k, sample=sample, min_docs=min_docs,
     )
 
 
@@ -1414,39 +1397,26 @@ def _selected_positions(
     *,
     k: int,
     sample: int,
-    fp_method: str = "rolling",
 ) -> DataFrame:
     """The streamed fingerprint pass shared by ALL substring-dedup
     operators: ``(__id, __p, __fp)`` for every content-selected window
     (``fp % sample == 0``).
 
-    ``fp_method="rolling"`` (default since r11, oracle-replayable): an
-    Arrow ``mapInPandas`` polynomial rolling-hash kernel — O(1)
-    amortized multiply-adds per character. ``fp_method="md5"``: one
-    Generate + codegen md5 projection — hashes k chars at EVERY
-    position, i.e. ~k× corpus bytes through md5, the dominant cost at
-    100 TB (measured on the x10 tier: spans pass 4.05 s md5 vs 1.91 s
-    rolling; equal at sf0.1). Both share the output schema and the
-    content-keyed selection property (a window's fingerprint depends
-    only on its k chars, so a duplicated substring still selects
-    identically in every document). The two methods choose DIFFERENT
-    1/sample subsets (different hash values), so spans can differ
-    within the documented per-content miss probability; with
-    ``sample=1`` they are exactly equal (pytest-pinned). Rolling
-    fingerprints are 63-bit polynomial hashes (collision-weaker than
-    md5's 60 truncated bits but ample for dedup); BOTH are replayed
-    bit-for-bit by the DuckDB oracles — the rolling hash is pure
-    integer arithmetic mod 2^63, so the replay is an exact HUGEINT
-    sum over a precomputed B-powers table.
+    The fingerprint is a 63-bit polynomial rolling hash computed by an
+    Arrow ``mapInPandas`` kernel (:func:`_rolling_selected_positions`):
+    O(1) amortized multiply-adds per character, where hashing each
+    window's k chars would push ~k× corpus bytes through the hash. A
+    window's fingerprint depends only on its k chars, so a duplicated
+    substring selects identically in every document. The hash is pure
+    integer arithmetic mod 2^63, so the DuckDB oracles replay it
+    bit-for-bit as an exact HUGEINT sum over a precomputed B-powers
+    table. :func:`_fp_spec` names the fingerprint space, and every
+    stored index carries that name.
     """
     if k < 2:
         raise ValueError("duplicate substring ops: k must be >= 2")
     if sample < 1:
         raise ValueError("duplicate substring ops: sample must be >= 1")
-    if fp_method not in ("md5", "rolling"):
-        raise ValueError(
-            f"duplicate substring ops: unknown fp_method {fp_method!r}"
-        )
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(text_col).cast("string").alias("__t"),
@@ -1463,35 +1433,15 @@ def _selected_positions(
     sc = df.sparkSession.sparkContext
     if base.rdd.getNumPartitions() < sc.defaultParallelism:
         base = base.repartition(sc.defaultParallelism)
-    if fp_method == "rolling":
-        sel = _rolling_selected_positions(base, k=k, sample=sample)
-    else:
-        pos = base.select(
-            "__id",
-            "__t",
-            F.explode(
-                F.sequence(F.lit(1), F.length("__t") - F.lit(k - 1))
-            ).alias("__p"),
-        )
-        fp = F.conv(
-            F.substring(
-                F.md5(F.substring(F.col("__t"), F.col("__p"), k)), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        sel = pos.select("__id", "__p", fp.alias("__fp")).filter(
-            F.col("__fp") % sample == 0
-        )
+    sel = _rolling_selected_positions(base, k=k, sample=sample)
     # One fp-keyed exchange here makes every downstream consumer (the
-    # distinct-doc census, the dup-fp semi/equi join probe, the keeper
+    # distinct-doc census, the dup-fp equi join probe, the keeper
     # election) hang off the SAME shuffle: Spark's exchange/stage reuse
     # then executes the fingerprint pass ONCE per operator instead of
     # once per consumer (guide §2.4 — the census + probe shape was
-    # measured re-running the whole Generate->md5 subtree 2-4x). At
+    # measured re-running the whole fingerprint subtree 2-4x). At
     # scale this shuffles the selected (id, p, fp) rows — ~24 bytes per
-    # kept window — once, in exchange for never re-hashing ~k× corpus
-    # bytes; the shuffle is the cheaper side by orders of magnitude.
+    # kept window — once, in exchange for never re-hashing the corpus.
     return sel.repartition("__fp")
 
 
@@ -1517,9 +1467,7 @@ def _rolling_selected_positions(
     1/sample selection filter runs INSIDE the kernel so only selected
     (id, p, fp) rows cross Arrow back to the JVM.
 
-    Scale shape identical to the md5 path (the downstream census/join/
-    islands consume the same schema); per-char cost drops from a
-    k-char md5 digest to a handful of multiply-adds.
+    Per-char cost is a handful of multiply-adds, not a k-char digest.
     """
     import numpy as np
     from pyspark.sql.types import StructType
@@ -1601,51 +1549,6 @@ def _rolling_selected_positions(
     return base.mapInPandas(kernel, schema=out_schema)
 
 
-def _duplicate_positions(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    k: int,
-    sample: int,
-    min_docs: int,
-    fp_method: str = "rolling",
-) -> DataFrame:
-    """The shared fingerprint-match stage of the substring-dedup pair:
-    ``(__id, __p, __fp)`` rows for every SELECTED window whose
-    fingerprint appears in >= ``min_docs`` distinct documents."""
-    sel = _selected_positions(
-        df, id_col, text_col, k=k, sample=sample, fp_method=fp_method
-    )
-    # count_distinct(struct(__id)) == count over pre-distinct'd
-    # (__fp, __id) pairs (the struct keeps a NULL id countable) and,
-    # pre-partitioned by __fp, plans as a two-level aggregate with ZERO
-    # extra exchanges (the old distinct()+groupBy shape shuffled twice).
-    # max(__p) + the always-true "__pmax >= 1" conjunct (positions are
-    # 1-based in both fp paths) keep __p REFERENCED in this branch:
-    # column pruning would otherwise narrow this branch's copy of the
-    # fp exchange to (__fp, __id), making it canonically different from
-    # the probe branch's and defeating exchange/stage reuse — with both
-    # branches consuming (__id, __p, __fp) the exchanges are identical
-    # and the fingerprint pass executes once (guide §2.4).
-    dup_fps = (
-        sel.groupBy("__fp")
-        .agg(
-            F.count_distinct(F.struct("__id")).alias("__nd"),
-            F.max("__p").alias("__pmax"),
-        )
-        .filter((F.col("__pmax") >= 1) & (F.col("__nd") >= min_docs))
-        .select("__fp")
-    )
-    # INNER join, not leftsemi: dup_fps is one row per fp (groupBy), so
-    # the row sets are identical — but PushDownLeftSemiAntiJoin would
-    # push a semi join below the fp repartition _selected_positions
-    # emits, splitting the census and probe onto two copies of the
-    # fingerprint pass; an inner join stays put, both consumers share
-    # the one fp-keyed exchange, and the pass executes once.
-    return sel.join(dup_fps, on="__fp")
-
-
 def _position_islands(hits: DataFrame, k: int) -> DataFrame:
     """SQL-islands merge of matched window positions into maximal
     ``(__id, s, e)`` spans (windows are [p, p+k))."""
@@ -1678,7 +1581,6 @@ def remove_duplicate_substrings(
     k: int = 40,
     sample: int = 8,
     min_docs: int = 2,
-    fp_method: str = "rolling",
 ) -> DataFrame:
     """The TRANSFORM half of substring dedup: cut every duplicated
     region from every document EXCEPT one global keeper occurrence —
@@ -1703,35 +1605,16 @@ def remove_duplicate_substrings(
 
     Returns one row per INPUT document: ``(id, text <cleaned>, n_cut
     INT, cut_chars BIGINT)`` — untouched documents pass through with
-    n_cut = 0. The rebuild is one ``aggregate`` fold over the doc's
-    sorted cut list (kept segments concatenated between cuts): one
-    fp-keyed window for the election, one id-keyed islands window, one
-    id-keyed join back to the text — nothing quadratic, same scale
-    shape as :func:`duplicate_substring_spans` plus the rebuild
-    projection.
+    n_cut = 0. This IS :func:`incremental_substring_removal` over an
+    empty index (every fingerprint is batch-new, so every duplicate
+    fingerprint elects a keeper), with the same scale shape as
+    :func:`duplicate_substring_spans` plus the fp-keyed keeper
+    aggregate, the islands windows and the rebuild projection —
+    nothing quadratic.
     """
-    base = df.select(
-        F.col(id_col).alias("__id"), F.col(text_col).cast("string")
-        .alias("__t")
-    )
-    hits = _duplicate_positions(
-        df, id_col, text_col, k=k, sample=sample, min_docs=min_docs,
-        fp_method=fp_method,
-    )
-    keepers = hits.groupBy("__fp").agg(
-        F.min(
-            F.struct(F.col("__id").alias("ki"), F.col("__p").alias("kp"))
-        ).alias("__k0")
-    )
-    tagged = hits.join(keepers, on="__fp")
-    is_keeper = (F.col("__id") == F.col("__k0.ki")) & (
-        F.col("__p") == F.col("__k0.kp")
-    )
-    unprotected = tagged.filter(~is_keeper).select("__id", "__p")
-    protected = tagged.filter(is_keeper).select("__id", "__p")
-    return _cut_and_rebuild(
-        base, unprotected, protected, k=k,
-        id_col=id_col, text_col=text_col,
+    return incremental_substring_removal(
+        df, _empty_fp_index(df.sparkSession, k=k, sample=sample),
+        id_col, text_col, k=k, sample=sample, min_docs=min_docs,
     )
 
 
@@ -1744,8 +1627,7 @@ def _cut_and_rebuild(
     id_col: str,
     text_col: str,
 ) -> DataFrame:
-    """The interval-subtraction cut set + per-doc text rebuild shared
-    by :func:`remove_duplicate_substrings` and
+    """The interval-subtraction cut set + per-doc text rebuild of
     :func:`incremental_substring_removal`: cut regions = islands of
     ``unprotected`` window positions MINUS islands of ``protected``
     ones (keeper windows' characters are never cut — the
@@ -1859,6 +1741,63 @@ def _cut_and_rebuild(
     )
 
 
+def _fp_spec(k: int, sample: int) -> str:
+    """The fingerprint-space tag of a stored substring index: the
+    63-bit rolling hash over k-char windows, 1/``sample`` selected.
+    Censuses under different tags share no fingerprints, so merging or
+    probing across them would silently match (almost) nothing."""
+    return f"roll63:k={k}:sample={sample}"
+
+
+def _empty_fp_index(
+    spark: SparkSession, *, k: int, sample: int
+) -> DataFrame:
+    """A zero-row index in the ``(k, sample)`` space that the optimizer
+    can SEE is empty: a ``range`` filtered by a literal ``False``, so
+    ``PropagateEmptyRelation`` folds the probe's index join away. (An
+    empty ``createDataFrame`` is a ``LogicalRDD``, which Catalyst cannot
+    fold, so the join would stay in the plan.)"""
+    return (
+        spark.range(1)
+        .select(
+            F.lit(None).cast("long").alias("fp"),
+            F.lit(None).cast("long").alias("n_docs"),
+            F.lit(_fp_spec(k, sample)).alias("fp_spec"),
+        )
+        .where(F.lit(False))
+    )
+
+
+def _checked_index(index: DataFrame, *, k: int, sample: int) -> DataFrame:
+    """``(fp, n_docs)`` of a stored index, refusing one built in another
+    fingerprint space. An index with no ``fp_spec`` column predates the
+    tag (it may hold md5 fingerprints) and is refused here, at call
+    time. A row whose tag differs from ``k``/``sample`` fails the action
+    through ``raise_error`` in this projection, which the merge and the
+    probe run anyway: the check starts no job and adds no pass."""
+    if "fp_spec" not in index.columns:
+        raise ValueError(
+            "substring fp index has no fp_spec column: it predates the "
+            "fingerprint tag and may hold md5 fingerprints; rebuild it "
+            "with substring_fp_index"
+        )
+    spec = _fp_spec(k, sample)
+    return index.select(
+        "fp",
+        F.when(F.col("fp_spec") == spec, F.col("n_docs"))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("substring fp index has fp_spec "),
+                    F.coalesce(F.col("fp_spec"), F.lit("NULL")),
+                    F.lit(f", this call needs {spec}"),
+                )
+            )
+        )
+        .alias("n_docs"),
+    )
+
+
 def substring_fp_index(
     df: DataFrame,
     id_col: str,
@@ -1866,17 +1805,18 @@ def substring_fp_index(
     *,
     k: int = 40,
     sample: int = 8,
-    fp_method: str = "rolling",
 ) -> DataFrame:
     """The STORED side of incremental substring dedup: the
-    ``(fp, n_docs)`` census of a corpus's selected window fingerprints.
-    Persist it (parquet, bucketed by ``fp`` at scale) once per base
-    corpus; each new crawl batch then checks against the index instead
-    of rescanning the base — the same incremental contract as
+    ``(fp, n_docs, fp_spec)`` census of a corpus's selected window
+    fingerprints. Persist it (parquet, bucketed by ``fp`` at scale) once
+    per base corpus; each new crawl batch then checks against the index
+    instead of rescanning the base — the same incremental contract as
     :func:`incremental_dedup` (content keys) and
     ``incremental_connected_components`` (near-dup clusters), at
     substring granularity. ~one row per distinct selected fingerprint
     (1/``sample`` of distinct k-grams); counts are DISTINCT docs.
+    ``fp_spec`` is the constant :func:`_fp_spec` tag, so the merge and
+    the probes refuse an index built with another ``k``/``sample``.
 
     Maintenance precondition (ADVICE r9): merging censuses by SUMMING
     ``n_docs`` per fp — and the batch+index totals the incremental
@@ -1886,15 +1826,17 @@ def substring_fp_index(
     ``min_docs`` spuriously; dedup re-crawls by doc id (or content key)
     BEFORE censusing.
     """
-    sel = _selected_positions(
-        df, id_col, text_col, k=k, sample=sample, fp_method=fp_method
-    )
+    sel = _selected_positions(df, id_col, text_col, k=k, sample=sample)
     return (
         sel.select("__fp", "__id")
         .distinct()
         .groupBy("__fp")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .select(F.col("__fp").alias("fp"), "n_docs")
+        .select(
+            F.col("__fp").alias("fp"),
+            "n_docs",
+            F.lit(_fp_spec(k, sample)).alias("fp_spec"),
+        )
     )
 
 
@@ -1906,7 +1848,6 @@ def merge_substring_fp_index(
     *,
     k: int = 40,
     sample: int = 8,
-    fp_method: str = "rolling",
 ) -> DataFrame:
     """Index MAINTENANCE after accepting a batch: the stored census
     plus the batch's census, summed per fingerprint — an aggregate,
@@ -1917,21 +1858,76 @@ def merge_substring_fp_index(
 
     PRECONDITION: the batch's doc ids are disjoint from every id the
     stored index has already counted (summing censuses double-counts
-    re-crawled docs — see :func:`substring_fp_index`). ``k``/``sample``/
-    ``fp_method`` must match the index's build parameters, or the
-    fingerprint spaces don't align.
+    re-crawled docs — see :func:`substring_fp_index`). ``k``/``sample``
+    must match the index's ``fp_spec``: an untagged index raises
+    ``ValueError`` here, a mismatched one fails the action. The merged
+    index keeps the tag.
 
     pytest pins the algebra: merge(index(base), batch) ==
     index(base ∪ batch), row for row.
     """
-    b = substring_fp_index(
-        batch, id_col, text_col, k=k, sample=sample, fp_method=fp_method
-    )
+    idx = _checked_index(index, k=k, sample=sample)
+    b = substring_fp_index(batch, id_col, text_col, k=k, sample=sample)
     return (
-        index.unionByName(b)
+        idx.unionByName(b.drop("fp_spec"))
         .groupBy("fp")
         .agg(F.sum("n_docs").cast("long").alias("n_docs"))
+        .withColumn("fp_spec", F.lit(_fp_spec(k, sample)))
     )
+
+
+def _probe_hits(
+    batch: DataFrame,
+    index: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    k: int,
+    sample: int,
+    min_docs: int,
+) -> DataFrame:
+    """The census/probe stage of both substring-dedup operators:
+    ``(__fp, __id, __p, __inbase)`` for every selected BATCH window
+    whose fingerprint's distinct-document total (batch census + indexed
+    ``n_docs``) reaches ``min_docs``. ``__inbase`` marks fingerprints
+    the index already holds."""
+    idx = _checked_index(index, k=k, sample=sample).select(
+        F.col("fp").alias("__fp"), F.col("n_docs").alias("__in")
+    )
+    sel = _selected_positions(batch, id_col, text_col, k=k, sample=sample)
+    # count_distinct(struct(__id)) == count over pre-distinct'd
+    # (__fp, __id) pairs (the struct keeps a NULL id countable) and,
+    # pre-partitioned by __fp, plans as a two-level aggregate with ZERO
+    # extra exchanges. max(__p) + the always-true "__pmax >= 1"
+    # conjunct (positions are 1-based) keep __p REFERENCED in this
+    # branch: column pruning would otherwise narrow this branch's copy
+    # of the fp exchange to (__fp, __id), making it canonically
+    # different from the probe branch's and defeating exchange/stage
+    # reuse — with both branches consuming (__id, __p, __fp) the
+    # exchanges are identical and the fingerprint pass executes once
+    # (guide §2.4).
+    bcensus = (
+        sel.groupBy("__fp")
+        .agg(
+            F.count_distinct(F.struct("__id")).cast("long").alias("__bn"),
+            F.max("__p").alias("__pmax"),
+        )
+        .filter(F.col("__pmax") >= 1)
+        .select("__fp", "__bn")
+    )
+    in_index = F.coalesce(F.col("__in"), F.lit(0))
+    dup_fps = (
+        bcensus.join(idx, on="__fp", how="left")
+        .filter(F.col("__bn") + in_index >= min_docs)
+        .select("__fp", (in_index > 0).alias("__inbase"))
+    )
+    # INNER join, not leftsemi: dup_fps is one row per fp (groupBy), so
+    # the row sets are identical — but PushDownLeftSemiAntiJoin would
+    # push a semi join below the fp repartition _selected_positions
+    # emits, splitting the census and probe onto two copies of the
+    # fingerprint pass; an inner join stays put, both consumers share
+    # the one fp-keyed exchange, and the pass executes once.
+    return sel.join(dup_fps, on="__fp")
 
 
 def incremental_substring_spans(
@@ -1943,7 +1939,6 @@ def incremental_substring_spans(
     k: int = 40,
     sample: int = 8,
     min_docs: int = 2,
-    fp_method: str = "rolling",
 ) -> DataFrame:
     """Duplicate-substring spans of a NEW batch against a stored
     :func:`substring_fp_index` — the base corpus is never rescanned.
@@ -1953,7 +1948,9 @@ def incremental_substring_spans(
     duplicates surface, exactly as a full :func:`duplicate_substring_
     spans` over base+batch would flag the batch's side (same k/sample/
     min_docs => same selected windows, same totals). Returns
-    ``(id, s, e)`` spans for BATCH documents only.
+    ``(id, s, e)`` spans for BATCH documents only. The index's
+    ``fp_spec`` must match ``k``/``sample`` (see
+    :func:`merge_substring_fp_index`).
 
     PRECONDITION: batch doc ids are DISJOINT from the ids the index
     was built over (ADVICE r9 — re-crawls are common in incremental
@@ -1970,37 +1967,10 @@ def incremental_substring_spans(
     after accepting a batch = union the batch census in (sum n_docs
     per fp) — an aggregate, not a rebuild.
     """
-    sel = _selected_positions(
-        batch, id_col, text_col, k=k, sample=sample, fp_method=fp_method
+    hits = _probe_hits(
+        batch, index, id_col, text_col, k=k, sample=sample,
+        min_docs=min_docs,
     )
-    # same column-set trick as _duplicate_positions (the always-true
-    # "__pmax >= 1" keeps __p referenced so this branch's fp exchange
-    # stays canonically identical to the probe branch's): the batch
-    # fingerprint pass executes once (guide §2.4).
-    bcensus = (
-        sel.groupBy("__fp")
-        .agg(
-            F.count_distinct(F.struct("__id")).cast("long").alias("__bn"),
-            F.max("__p").alias("__pmax"),
-        )
-        .filter(F.col("__pmax") >= 1)
-        .select("__fp", "__bn")
-    )
-    idx = index.select(
-        F.col("fp").alias("__fp"), F.col("n_docs").alias("__in")
-    )
-    dup_fps = (
-        bcensus.join(idx, on="__fp", how="left")
-        .filter(
-            F.col("__bn") + F.coalesce(F.col("__in"), F.lit(0))
-            >= min_docs
-        )
-        .select("__fp")
-    )
-    # inner join == leftsemi here (dup_fps is one row per fp) but does
-    # not get pushed below the shared fp exchange — see
-    # _duplicate_positions.
-    hits = sel.join(dup_fps.select("__fp"), on="__fp")
     return _position_islands(hits, k).select(
         F.col("__id").alias(id_col), "s", "e"
     )
@@ -2015,7 +1985,6 @@ def incremental_substring_removal(
     k: int = 40,
     sample: int = 8,
     min_docs: int = 2,
-    fp_method: str = "rolling",
 ) -> DataFrame:
     """The TRANSFORM half of incremental substring dedup — cleaned
     BATCH text against a stored :func:`substring_fp_index`, completing
@@ -2026,8 +1995,8 @@ def incremental_substring_removal(
     Keeper policy: a batch window whose fingerprint is KNOWN TO THE
     BASE (indexed ``n_docs >= 1``) is always unprotected — the base
     copy is already written and survives, so the batch occurrence is
-    cut. Fingerprints NEW in this batch elect a keeper exactly as
-    :func:`remove_duplicate_substrings` (MIN over the (id, p) struct —
+    cut. Fingerprints NEW in this batch elect a keeper as
+    :func:`remove_duplicate_substrings` describes (MIN over the (id, p) struct —
     an aggregate, not a row_number window, for the same
     10^9-occurrence-boilerplate reason), and the cut set is the same
     protected-interval subtraction, so every batch-new duplicated
@@ -2056,37 +2025,10 @@ def incremental_substring_removal(
         F.col(id_col).alias("__id"),
         F.col(text_col).cast("string").alias("__t"),
     )
-    sel = _selected_positions(
-        batch, id_col, text_col, k=k, sample=sample, fp_method=fp_method
+    hits = _probe_hits(
+        batch, index, id_col, text_col, k=k, sample=sample,
+        min_docs=min_docs,
     )
-    # same column-set trick as _duplicate_positions (the always-true
-    # "__pmax >= 1" keeps __p referenced so this branch's fp exchange
-    # stays canonically identical to the probe branch's): the batch
-    # fingerprint pass executes once (guide §2.4).
-    bcensus = (
-        sel.groupBy("__fp")
-        .agg(
-            F.count_distinct(F.struct("__id")).cast("long").alias("__bn"),
-            F.max("__p").alias("__pmax"),
-        )
-        .filter(F.col("__pmax") >= 1)
-        .select("__fp", "__bn")
-    )
-    idx = index.select(
-        F.col("fp").alias("__fp"), F.col("n_docs").alias("__in")
-    )
-    dup_fps = (
-        bcensus.join(idx, on="__fp", how="left")
-        .filter(
-            F.col("__bn") + F.coalesce(F.col("__in"), F.lit(0))
-            >= min_docs
-        )
-        .select(
-            "__fp",
-            (F.coalesce(F.col("__in"), F.lit(0)) > 0).alias("__inbase"),
-        )
-    )
-    hits = sel.join(dup_fps, on="__fp")
     keepers = (
         hits.filter(~F.col("__inbase"))
         .groupBy("__fp")

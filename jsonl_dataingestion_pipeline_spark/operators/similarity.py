@@ -170,51 +170,6 @@ def make_centroids(
     )
 
 
-def refine_centroids(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iterations: int = 1,
-) -> DataFrame:
-    """Lloyd's k-means refinement over the seeded centroids.
-
-    Each round: assign every vector to its nearest centroid (broadcast
-    argmax, no shuffle of the corpus beyond the per-id groupBy already in
-    :func:`assign_cells`), then recompute each cell's mean vector with a
-    posexplode + (cell, dim) aggregation — map-side partial averages, one
-    row per (cell, dim) through the shuffle, fully distributed at any
-    corpus size. Cells that lose all members drop out (fewer, denser
-    cells — harmless for probing). FP summation order makes the last bits
-    run-dependent, so refined centroids feed the *recall* path, not the
-    oracle-checked deterministic seed (q29 keeps :func:`make_centroids`).
-    """
-    for _ in range(iterations):
-        assigned = assign_cells(
-            corpus, centroids, id_col=id_col, vec_col=vec_col
-        )
-        expl = assigned.select(
-            "cell_id", F.posexplode(F.col(vec_col)).alias("pos", "v")
-        )
-        means = expl.groupBy("cell_id", "pos").agg(F.avg("v").alias("m"))
-        centroids = (
-            means.groupBy("cell_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                ).alias("__pm")
-            )
-            .select(
-                "cell_id",
-                F.transform(F.col("__pm"), lambda x: x["m"].cast("float")).alias(
-                    vec_col
-                ),
-            )
-        )
-    return centroids
-
-
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic ±1 hyperplanes (md5-seeded) for sign-hash bucketing."""
     import hashlib

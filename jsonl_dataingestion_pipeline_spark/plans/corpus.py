@@ -44,6 +44,7 @@ from jsonl_dataingestion_pipeline_spark.operators.common import (
 )
 from jsonl_dataingestion_pipeline_spark.operators.curation import dedup_lines
 from jsonl_dataingestion_pipeline_spark.operators.dedup import (
+    content_key,
     dedup_near_duplicates,
     ngram_jaccard_pairs,
     shingle_base,
@@ -75,9 +76,7 @@ def curate_corpus(
     s0 = df.select(F.col(id_col), F.col(group_col), F.col(text_col))
 
     # -- 1: exact dedup on normalized content, deterministic keep-min-id
-    ck = F.md5(
-        F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    )
+    ck = content_key(F.col(text_col))
     w = Window.partitionBy("__ck").orderBy(F.col(id_col).asc())
     s1 = _pipeline_break(
         s0.withColumn("__ck", ck)

@@ -46,6 +46,7 @@ from jsonl_dataingestion_pipeline_spark.operators.curation import (
     gopher_quality_flags,
     normalized_line_key,
 )
+from jsonl_dataingestion_pipeline_spark.operators.dedup import content_key
 
 
 def extract_web_corpus(
@@ -117,7 +118,7 @@ def extract_web_corpus(
     )
 
     # -- 5: exact dedup on normalized content, keep min id
-    ck = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
+    ck = content_key(F.col("text"))
     w = Window.partitionBy("__ck").orderBy(F.col(id_col).asc())
     s5 = _pipeline_break(
         s4.withColumn("__ck", ck)

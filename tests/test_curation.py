@@ -1242,6 +1242,7 @@ class TestIncrementalSubstringSpans:
         from jsonl_dataingestion_pipeline_spark.operators.dedup import (
             duplicate_substring_spans,
             incremental_substring_spans,
+            substring_fp_index,
         )
 
         rows = [
@@ -1249,7 +1250,9 @@ class TestIncrementalSubstringSpans:
             (2, "twin text AAAABBBBCCCCDDDDEEEEFFFF there"),
         ]
         batch = spark.createDataFrame(rows, "id long, text string")
-        empty_idx = spark.createDataFrame([], "fp long, n_docs long")
+        empty_idx = substring_fp_index(
+            batch.limit(0), "id", "text", k=24, sample=1
+        )
         inc = {
             (r.id, r.s, r.e)
             for r in incremental_substring_spans(
@@ -1392,10 +1395,13 @@ class TestIncrementalSubstringRemoval:
         from jsonl_dataingestion_pipeline_spark.operators.dedup import (
             incremental_substring_removal,
             remove_duplicate_substrings,
+            substring_fp_index,
         )
 
         _base, batch = self._frames(spark)
-        empty_idx = spark.createDataFrame([], "fp long, n_docs long")
+        empty_idx = substring_fp_index(
+            batch.limit(0), "id", "text", k=24, sample=1
+        )
         inc = {
             r.id: (r.text, r.n_cut, r.cut_chars)
             for r in incremental_substring_removal(
@@ -1412,49 +1418,82 @@ class TestIncrementalSubstringRemoval:
 
 
 class TestRollingFingerprintPath:
-    """fp_method="rolling" (VERDICT r9 #4): the Arrow polynomial
-    rolling-hash kernel is the 100 TB scale path for the substring
-    family — md5-at-every-position hashes ~k× corpus bytes, rolling
-    does O(1) multiply-adds per char. Same schema, same content-keyed
-    selection property; md5 stays the oracle-gated default."""
+    """The Arrow polynomial rolling-hash kernel is the substring
+    family's only fingerprint: O(1) multiply-adds per char instead of
+    hashing k chars at every position, with content-keyed selection
+    (a window's fingerprint depends only on its k chars)."""
 
-    def test_sample1_spans_identical_to_md5(self, spark):
-        # at sample=1 both methods select EVERY window, so the span
-        # sets must be exactly equal — selection only differs when
-        # sampling (different hash values -> different 1/s subsets)
+    @staticmethod
+    def _brute_force_spans(rows, k, min_docs):
+        """Pure-Python reference for ``sample=1``: every k-char window
+        found in >= ``min_docs`` distinct docs, merged per doc into
+        ``[p, p+k)`` islands (1-based, touching windows merge)."""
+        docs_per: dict = {}
+        for i, t in rows:
+            for j in range(len(t) - k + 1):
+                docs_per.setdefault(t[j: j + k], set()).add(i)
+        spans = set()
+        for i, t in rows:
+            cur = None
+            for j in range(len(t) - k + 1):
+                if len(docs_per[t[j: j + k]]) < min_docs:
+                    continue
+                p = j + 1
+                if cur is not None and p <= cur[1]:
+                    cur[1] = max(cur[1], p + k)
+                    continue
+                if cur is not None:
+                    spans.add((i, cur[0], cur[1]))
+                cur = [p, p + k]
+            if cur is not None:
+                spans.add((i, cur[0], cur[1]))
+        return spans
+
+    def test_sample1_spans_match_brute_force_reference(self, spark):
+        # sample=1 selects every window, so the operator must equal the
+        # exhaustive reference: planted shared regions (two of them
+        # overlapping in one doc), a within-doc repeat that is not
+        # shared, a within-doc repeat that is, and short docs
+        import random
+
         from jsonl_dataingestion_pipeline_spark.operators.dedup import (
             duplicate_substring_spans,
         )
 
-        shared = (
-            "This boilerplate license paragraph is repeated verbatim "
-            "across several documents in the corpus."
-        )
+        rng = random.Random(20240601)
+
+        def noise(n):
+            return "".join(
+                rng.choice("abcdefghijklmnopqrstuvwxyz ,.") for _ in range(n)
+            )
+
+        shared_a = noise(60)
+        shared_b = noise(45)
+        self_rep = noise(30)
         rows = [
-            (1, "Doc one intro:" + shared + "@doc one outro."),
-            (2, "Doc two says something else, then;" + shared),
-            (3, "Third doc!" + shared + "#done here"),
-            (4, "No duplicates in this document whatsoever, it is "
-                "entirely original prose from start to finish."),
+            (1, noise(20) + shared_a + noise(15)),
+            (2, shared_a + noise(33) + shared_b),
+            (3, noise(7) + shared_b + noise(40) + shared_a[10:50]),
+            (4, noise(12) + self_rep + noise(9) + self_rep + noise(5)),
+            (5, noise(25) + shared_b[:30] + noise(25) + shared_b[:30]),
+            (6, noise(80)),
+            (7, noise(10)),
+            (8, shared_a[:20]),
         ]
         df = spark.createDataFrame(rows, "id long, text string")
-        md5 = sorted(
-            (r.id, r.s, r.e)
-            for r in duplicate_substring_spans(
-                df, "id", "text", k=24, sample=1
-            ).collect()
-        )
-        rol = sorted(
-            (r.id, r.s, r.e)
-            for r in duplicate_substring_spans(
-                df, "id", "text", k=24, sample=1, fp_method="rolling"
-            ).collect()
-        )
-        assert md5 == rol and md5
+        for min_docs in (2, 3):
+            got = {
+                (r.id, r.s, r.e)
+                for r in duplicate_substring_spans(
+                    df, "id", "text", k=24, sample=1, min_docs=min_docs
+                ).collect()
+            }
+            want = self._brute_force_spans(rows, 24, min_docs)
+            assert got == want and want, (min_docs, got ^ want)
 
     def test_sampled_rolling_detects_planted_duplicates(self, spark):
         # the probabilistic detection contract: a planted region of
-        # length L >> k survives 1/sample selection on BOTH paths
+        # length L >> k survives 1/sample selection
         from jsonl_dataingestion_pipeline_spark.operators.dedup import (
             duplicate_substring_spans,
         )
@@ -1471,18 +1510,17 @@ class TestRollingFingerprintPath:
                 "all, purely original content through and through."),
         ]
         df = spark.createDataFrame(rows, "id long, text string")
-        for method in ("md5", "rolling"):
-            got = {
-                r.id
-                for r in duplicate_substring_spans(
-                    df, "id", "text", k=24, sample=4, fp_method=method
-                ).collect()
-            }
-            assert got == {1, 2}, (method, got)
+        got = {
+            r.id
+            for r in duplicate_substring_spans(
+                df, "id", "text", k=24, sample=4
+            ).collect()
+        }
+        assert got == {1, 2}, got
 
     def test_rolling_removal_and_index_roundtrip(self, spark):
-        # the whole family accepts fp_method: index built rolling must
-        # feed incremental ops consistently (same method both sides)
+        # an index built by substring_fp_index feeds the incremental
+        # removal consistently with the full run over base + batch
         from jsonl_dataingestion_pipeline_spark.operators.dedup import (
             incremental_substring_removal,
             remove_duplicate_substrings,
@@ -1501,38 +1539,19 @@ class TestRollingFingerprintPath:
             [(10, "New doc ten leads in, then: " + boiler)],
             "id long, text string",
         )
-        idx = substring_fp_index(
-            base, "id", "text", k=24, sample=1, fp_method="rolling"
-        )
+        idx = substring_fp_index(base, "id", "text", k=24, sample=1)
         out = incremental_substring_removal(
-            batch, idx, "id", "text", k=24, sample=1,
-            fp_method="rolling",
+            batch, idx, "id", "text", k=24, sample=1
         ).collect()[0]
         assert boiler not in out.text and out.n_cut == 1
         # equals the full run projected to the batch doc
         full = {
             r.id: r.text
             for r in remove_duplicate_substrings(
-                base.unionByName(batch), "id", "text", k=24, sample=1,
-                fp_method="rolling",
+                base.unionByName(batch), "id", "text", k=24, sample=1
             ).collect()
         }
         assert full[10] == out.text
-
-    def test_unknown_method_raises(self, spark):
-        from jsonl_dataingestion_pipeline_spark.operators.dedup import (
-            duplicate_substring_spans,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "x" * 40)], "id long, text string"
-        )
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="fp_method"):
-            duplicate_substring_spans(
-                df, "id", "text", k=24, sample=1, fp_method="sha1"
-            ).collect()
 
 
 class TestMergeSubstringFpIndex:
@@ -1582,6 +1601,101 @@ class TestMergeSubstringFpIndex:
         assert merged == rebuilt and merged
         # the shared boilerplate's fingerprints count BOTH sides
         assert any(n >= 2 for _fp, n in merged)
+
+
+class TestFpIndexSpec:
+    """A stored substring index carries its fingerprint spec; the merge
+    and both probes refuse an index from another fingerprint space."""
+
+    BOILER = (
+        "This licensing boilerplate paragraph is shared between "
+        "the old crawl and the new crawl verbatim."
+    )
+
+    def _frames(self, spark):
+        base = spark.createDataFrame(
+            [(1, "Base doc one says things. " + self.BOILER)],
+            "id long, text string",
+        )
+        batch = spark.createDataFrame(
+            [(10, "New doc ten leads in, then: " + self.BOILER)],
+            "id long, text string",
+        )
+        return base, batch
+
+    @staticmethod
+    def _consumers(batch, idx):
+        """The merge and both probes, called with k=24, sample=1."""
+        from jsonl_dataingestion_pipeline_spark.operators.dedup import (
+            incremental_substring_removal,
+            incremental_substring_spans,
+            merge_substring_fp_index,
+        )
+
+        kw = {"k": 24, "sample": 1}
+        return {
+            "merge": lambda: merge_substring_fp_index(
+                idx, batch, "id", "text", **kw
+            ),
+            "spans": lambda: incremental_substring_spans(
+                batch, idx, "id", "text", **kw
+            ),
+            "removal": lambda: incremental_substring_removal(
+                batch, idx, "id", "text", **kw
+            ),
+        }
+
+    def test_index_and_merge_carry_the_tag(self, spark):
+        from jsonl_dataingestion_pipeline_spark.operators.dedup import (
+            merge_substring_fp_index,
+            substring_fp_index,
+        )
+
+        base, batch = self._frames(spark)
+        idx = substring_fp_index(base, "id", "text", k=24, sample=1)
+        merged = merge_substring_fp_index(
+            idx, batch, "id", "text", k=24, sample=1
+        )
+        for frame in (idx, merged):
+            specs = {r.fp_spec for r in frame.select("fp_spec").collect()}
+            assert specs == {"roll63:k=24:sample=1"}
+
+    def test_untagged_index_refused_at_call_time(self, spark):
+        import pytest as _pytest
+
+        _base, batch = self._frames(spark)
+        # the pre-tag (fp, n_docs) schema, which may hold md5 fps
+        untagged = spark.createDataFrame([(4, 1)], "fp long, n_docs long")
+        for name, call in self._consumers(batch, untagged).items():
+            with _pytest.raises(ValueError, match="fp_spec"):
+                call()
+
+    def test_mismatched_index_refused_by_the_action(self, spark):
+        import pytest as _pytest
+
+        from jsonl_dataingestion_pipeline_spark.operators.dedup import (
+            substring_fp_index,
+        )
+
+        base, batch = self._frames(spark)
+        sc = spark.sparkContext
+        for k, sample in ((16, 1), (24, 2)):
+            idx = substring_fp_index(base, "id", "text", k=k, sample=sample)
+            # building the probe frames starts no Spark job: the check
+            # rides in the index projection the action runs anyway
+            group = f"fp-spec-check-{k}-{sample}"
+            sc.setJobGroup(group, "build only")
+            try:
+                frames = {
+                    name: call()
+                    for name, call in self._consumers(batch, idx).items()
+                }
+                assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            finally:
+                sc._jsc.clearJobGroup()
+            for name, frame in frames.items():
+                with _pytest.raises(Exception, match="fp_spec"):
+                    frame.collect()
 
 
 class TestParagraphDupStats:

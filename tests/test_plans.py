@@ -91,6 +91,24 @@ def test_one_barrier_policy():
     assert found == []
 
 
+def test_api_md_is_fresh():
+    """API.md is exactly what ``tools/gen_api.py`` renders from the
+    package source, so a change to the public surface that skips the
+    regeneration fails here. An AST walk; no JVM."""
+    import importlib.util
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    spec = importlib.util.spec_from_file_location(
+        "gen_api", repo / "tools" / "gen_api.py"
+    )
+    gen_api = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen_api)
+    assert gen_api.render() == (repo / "API.md").read_text(), (
+        "API.md is stale: run python tools/gen_api.py"
+    )
+
+
 def test_shipment_transform_is_shuffle_free(spark, shipment_df_factory):
     from jsonl_dataingestion_pipeline_spark.plans.shipment import transform_shipments
 
@@ -755,18 +773,17 @@ def test_q189_loss_mask_is_pure_projection(spark):
 
 
 def test_q192_substring_spans_no_cartesian_streamed_generate(spark):
-    """q192 (PLANS.md): the per-position fingerprint pass streams —
-    since r11 the default is the Arrow rolling-hash kernel (a
-    MapInPandas node; the md5 path's streamed Generate remains
-    available via fp_method) — no CartesianProduct anywhere, and the
-    duplicate-census join back onto the selected positions is a real
-    join on the fingerprint key (hash exchange), never a nested
-    loop."""
+    """q192 (PLANS.md): the per-position fingerprint pass streams
+    through the Arrow rolling-hash kernel (a MapInPandas node, the
+    substring family's only fingerprint) — no CartesianProduct
+    anywhere, and the duplicate-census join back onto the selected
+    positions is a real join on the fingerprint key (hash exchange),
+    never a nested loop."""
     df = em.q192_substring_dedup(spark, SF)
     tree = _tree(_formatted(spark, df))
     assert "CartesianProduct" not in tree, tree
     assert "BroadcastNestedLoopJoin" not in tree, tree
-    # the rolling fingerprint kernel (r11 default)
+    # the rolling fingerprint kernel
     assert "MapInPandas" in tree, tree
 
 
@@ -776,7 +793,7 @@ def test_q192_census_and_probe_share_one_fp_exchange(spark):
     (__id, __p, __fp) column set under hashpartitioning(__fp) — so
     AQE stage reuse executes the per-position fingerprint pass once.
     Column pruning narrowing the census copy to (__id, __fp) silently
-    doubles the md5 pass (dedup.py keeps __p alive with the
+    doubles the fingerprint pass (dedup.py keeps __p alive with the
     always-true __pmax >= 1 conjunct precisely to prevent that)."""
     import re
 

@@ -326,27 +326,6 @@ def test_deterministic_sample_properties(spark):
     assert strat and all(r["stratum"] == "true" for r in strat)
 
 
-def test_refine_centroids_improves_or_holds_recall(spark, embeddings):
-    from jsonl_dataingestion_pipeline_spark.operators import similarity
-
-    q = embeddings.filter(F.col("vec_id") < 5)
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.cosine_topk(embeddings, q, k=5).collect()
-    }
-    seeds = similarity.make_centroids(embeddings, 8)
-    refined = similarity.refine_centroids(embeddings, seeds, iterations=2)
-    assert refined.count() <= 8  # empty cells may drop
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.ivf_topk(
-            embeddings, q, n_cells=8, nprobe=4, k=5, centroids=refined
-        ).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5  # refined cells must stay a usable index
-
-
 def test_incremental_dedup_exact_near_and_novel(spark):
     from jsonl_dataingestion_pipeline_spark.operators.dedup import (
         incremental_dedup,

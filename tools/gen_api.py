@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Regenerate API.md: every public function/class in the package with
 its signature and first docstring line. Pure AST walk — no imports, no
-Spark. Run after adding operators: `python tools/gen_api.py`.
+Spark. Run after changing the public surface: `python tools/gen_api.py`.
+``tests/test_plans.py::test_api_md_is_fresh`` fails while API.md is stale.
 """
 
 from __future__ import annotations
@@ -36,7 +37,8 @@ def sig_of(fn: ast.FunctionDef) -> str:
     return f"{fn.name}({', '.join(parts)})"
 
 
-def main() -> int:
+def render() -> str:
+    """The full text of API.md for the package as it is on disk."""
     out = [
         "# API — public surface of `jsonl_dataingestion_pipeline_spark`",
         "",
@@ -75,9 +77,14 @@ def main() -> int:
                 if mod_doc:
                     out += [mod_doc, ""]
                 out += rows + [""]
+    return "\n".join(out)
+
+
+def main() -> int:
+    text = render()
     with open(os.path.join(REPO, "API.md"), "w") as fh:
-        fh.write("\n".join(out))
-    print(f"wrote API.md ({len(out)} lines)")
+        fh.write(text)
+    print(f"wrote API.md ({text.count(chr(10)) + 1} lines)")
     return 0
 
 

@@ -1091,8 +1091,8 @@ def run_queries(spark, sf_dir: str, k: int, only: list[str] | None = None) -> di
         # constant-cost (4 cells / 8 codes over driver-held rounds),
         # the exact and ADC sides are single scans -> const 1-row
         # output, wall must track the scan. Clears the trained-
-        # quantizer cache so each scale trains on ITS corpus.
-        entry._TRAINED_CACHE.clear()
+        # quantizer memo so each scale trains on ITS corpus.
+        entry._TRAINED.clear()
         return entry.q171_ann_recall_audit(spark, sf_dir)
 
     def q172_scaled(spark, sf_dir):

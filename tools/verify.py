@@ -15,7 +15,9 @@ Exit code 0 iff every stage passes. Stages:
      the one-scan guard: one ``run_batch`` call runs exactly one
      SQL execution that scans the CSV, and the JVM-free barrier
      guard: only ``operators/common.py`` calls ``localCheckpoint`` /
-     ``checkpoint``, and no function takes a ``reliable`` flag.
+     ``checkpoint``, and no function takes a ``reliable`` flag, and
+     the JVM-free API.md freshness guard: API.md equals
+     ``tools/gen_api.py``'s ``render()``.
   3. (--heavy) the shuffle-heavy dedup/similarity family at sf0.1.
   4. (--full) the whole pytest suite.
 """
