@@ -44,15 +44,23 @@ attempt's deltas; per-attempt (wall, steal, gc) triples land in
 prose).
 
 Each query runs ``runs_per_query`` times and reports the per-query MIN
-(steady-state wall clock). Rationale, measured in round 4: the first
-execution of a heavy query at the bench SF carries a 1-3s one-time
-constant the sf0.001 warmup pass cannot pre-compile — AQE picks
-different plan shapes at sf0.1 than at sf0.001, so fresh
-whole-stage-codegen classes compile on first touch (q25: 4.9s first
-run, 2.13s every run after; q26: 2.8s -> 2.4s). That constant is
-per-plan-shape, not per-byte — at cluster scale it is microseconds per
-task-hour — so steady-state is the number that predicts 100 TB
-throughput. ``first_run`` is also reported per query for transparency.
+(steady-state wall clock); ``first_run`` is also reported per query. The
+first execution of a heavy query at the bench SF carries a one-time
+constant (q25 at sf0.1, 4 cores: 5.7-6.5s first run, 3.4-3.8s after).
+The constant does not grow with the data, so steady state is the number
+that predicts throughput at scale. It is NOT fresh plan shapes compiling
+on first touch: the sf0.001 warmup compiles ~1,700 whole-stage-codegen
+classes, and with a generated-class cache that holds them
+(``spark.sql.codegen.cache.maxEntries``, set in ``session._DEFAULTS``)
+the timed loop compiles only 106-120 more over all 117 queries and 234
+attempts: 98 queries compile none, q25 two. Spark's default cache of 100
+entries evicted the warmup's classes before the timed loop reached them,
+so every attempt compiled again (2,721-2,762 classes, 18.7-20.2s of
+Janino time; two runs each). The rest of the constant is not codegen and
+is not attributed yet. Per query, ``bench_detail.json`` records
+``codegen_compiles``, ``codegen_ms`` (Janino) and ``jit_ms`` (HotSpot),
+each summed over the attempts, and ``runtime`` records the effective
+cache size.
 """
 
 from __future__ import annotations
@@ -247,6 +255,9 @@ def _runtime_info(spark) -> dict:
         "spark_local_dir": spark.conf.get(
             "spark.local.dir", jvm.System.getProperty("java.io.tmpdir")
         ),
+        "spark.sql.codegen.cache.maxEntries": spark.conf.get(
+            "spark.sql.codegen.cache.maxEntries"
+        ),
     }
     try:
         with open("/proc/meminfo") as f:
@@ -267,6 +278,15 @@ def _gc_millis(spark) -> float:
     )
     return float(
         sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
+    )
+
+
+def _jit_millis(spark) -> float:
+    """Cumulative HotSpot JIT compilation time (the JVM's
+    ``CompilationMXBean``), milliseconds."""
+    return float(
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getCompilationMXBean().getTotalCompilationTime()
     )
 
 
@@ -335,6 +355,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     from jsonl_dataingestion_pipeline_spark import get_spark
+    from perfbench.trace import codegen_counters
 
     spark = get_spark(
         app_name="bench",
@@ -366,6 +387,7 @@ def main() -> int:
     # whole-stage-codegen compilation (irrelevant at cluster scale, but
     # 1-2s of noise per query at bench scale).
     warm_sf = "/root/testdata/sf0.001"
+    warm_cg0 = codegen_counters(spark)[0]
     if os.path.isdir(warm_sf) and os.path.abspath(warm_sf) != os.path.abspath(sf_dir):
         for name in HEADLINE:
             try:
@@ -376,6 +398,7 @@ def main() -> int:
                     f"# warmup FAILED for {name}: {type(e).__name__}: {e}",
                     file=sys.stderr,
                 )
+    warmup_compiles = codegen_counters(spark)[0] - warm_cg0
     runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     # Steal-aware retry (VERDICT r9 #2): a run whose per-attempt steal
     # delta exceeds this many seconds was measured while the hypervisor
@@ -401,6 +424,11 @@ def main() -> int:
     steal_s: dict[str, float] = {}
     attempts_n: dict[str, int] = {}
     attempt_detail: dict[str, list] = {}
+    # whole-stage-codegen classes compiled (Janino count and ms) and
+    # HotSpot JIT ms, summed over a query's attempts
+    codegen_compiles: dict[str, int] = {}
+    codegen_ms: dict[str, float] = {}
+    jit_ms: dict[str, float] = {}
     tick_hz = float(os.sysconf("SC_CLK_TCK")) if hasattr(os, "sysconf") \
         else 100.0
     total = 0.0
@@ -416,8 +444,10 @@ def main() -> int:
         # runs_per_query attempts measured without hypervisor steal
         attempts: list[tuple[float, float, float]] = []  # (wall, steal, gc)
         max_attempts = runs_per_query + max(extra_attempts, 0)
+        q_compiles, q_compile_ms, q_jit_ms = 0, 0.0, 0.0
         while len(attempts) < max_attempts:
             gc0 = _gc_millis(spark)
+            cg0, jit0 = codegen_counters(spark), _jit_millis(spark)
             st0 = _steal_ticks()
             t0 = time.time()
             df = fn(spark, sf_dir)
@@ -429,6 +459,10 @@ def main() -> int:
                 if st0 >= 0 and st1 >= 0 else -1.0
             )
             attempts.append((dt, stl, round(_gc_millis(spark) - gc0, 1)))
+            cg1 = codegen_counters(spark)
+            q_compiles += cg1[0] - cg0[0]
+            q_compile_ms += cg1[1] - cg0[1]
+            q_jit_ms += _jit_millis(spark) - jit0
             if len(attempts) == 1:
                 first_run[name] = dt
 
@@ -443,6 +477,9 @@ def main() -> int:
             if len([a for a in attempts if _clean(a)]) >= runs_per_query:
                 break
         attempts_n[name] = len(attempts)
+        codegen_compiles[name] = q_compiles
+        codegen_ms[name] = round(q_compile_ms, 1)
+        jit_ms[name] = round(q_jit_ms, 1)
         clean = [a for a in attempts if a[1] < 0 or a[1] <= steal_retry_s]
         if steal_retry_s <= 0:
             sel = min(attempts, key=lambda a: a[0])  # retry disabled
@@ -463,7 +500,8 @@ def main() -> int:
         print(
             f"# {name}: {n} rows in {best}s"
             f" (first run {first_run[name]}s, gc {gc_ms[name]}ms,"
-            f" load1 {load1[name]}, steal {steal_s[name]}s{retried})",
+            f" load1 {load1[name]}, steal {steal_s[name]}s{retried},"
+            f" {codegen_compiles[name]} classes compiled)",
             file=sys.stderr,
         )
     sentinels.append(_sentinel(spark))
@@ -511,6 +549,10 @@ def main() -> int:
         "core_steal_clean": core_clean,
         "attempts": attempts_n,
         "attempt_detail": attempt_detail,
+        "codegen_compiles": codegen_compiles,
+        "codegen_ms": codegen_ms,
+        "jit_ms": jit_ms,
+        "warmup_codegen_compiles": warmup_compiles,
     }
     with open(os.path.join(REPO, "bench_detail.json"), "w") as f:
         json.dump(detail, f, indent=1)

@@ -165,7 +165,8 @@ DROP_COLUMNS_AFTER_LOAD: tuple[str, ...] = (
 )
 
 # Max bytes per output JSONL file (reference src/config.py:18-19) — applied
-# approximately via spark.sql.files.maxRecordsPerFile in the sink.
+# approximately by the per-write ``maxRecordsPerFile`` option that
+# ``sources/jsonl.py::write_documents`` derives from a sampled size.
 MAX_FILE_SIZE_BYTES: int = 12 * 1024 * 1024
 
 

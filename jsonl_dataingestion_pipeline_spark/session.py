@@ -10,6 +10,9 @@ on ``local[*]``:
 - Arrow enabled for the few pandas_udf paths (simhash, multimodal stubs).
 - UTC session timezone so date semantics are reproducible and match the
   DuckDB correctness oracle.
+- Generated-class cache sized to the engine's measured working set, so a
+  warm run reuses its whole-stage-codegen classes instead of compiling
+  them again.
 - PySpark DataFrame-debugging origin capture DISABLED
   (``spark.python.sql.dataFrameDebugging.enabled=false``): it costs 3
   py4j round trips + a Python stack walk per DataFrame API call, pure
@@ -42,9 +45,20 @@ _DEFAULTS: dict[str, str] = {
     # ~90s plan-construction pass over the full headline set,
     # OPTIMIZATION_r10.md). Costs only error-message enrichment.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
-    # One output file rarely needs >1M docs; keeps file sizes bounded for
-    # the JSONL sink (reference caps files at 12 MB — see sinks.jsonl).
-    "spark.sql.files.maxRecordsPerFile": "0",
+    # Generated-class cache, shared by every query of the JVM (a static
+    # conf, read when the context starts). Spark's default of 100 is
+    # smaller than one run of the curation funnels, so a run evicted and
+    # recompiled (and HotSpot re-JITted) its own classes: a warm
+    # perfbench curation_funnels iteration compiled 329 classes (2.1 s
+    # of Janino) where a cache that holds them compiles 4. Distinct
+    # classes per session, measured with a cap that never evicts (4
+    # cores): curation_funnels 300 + ~4 per iteration,
+    # shipment_increments 38 + ~2, one bench.py session ~1,810 (1,704 in
+    # the sf0.001 warm-up, 106 more at sf0.1), one tier-1 test session
+    # 5,316. The cap holds the largest with ~1.5x headroom. Cached
+    # classes stay loaded: over the tier-1 session metaspace grew 213 ->
+    # 249 MB and peak JVM RSS 2.10 -> 2.19 GB.
+    "spark.sql.codegen.cache.maxEntries": "8192",
 }
 
 

@@ -369,6 +369,38 @@ def test_q118_stage_checkpoints_prevent_recompute(spark):
     assert "WindowGroupLimit" in tree, tree
 
 
+def test_warm_funnels_reuse_generated_classes(spark):
+    """A second run of the web and corpus funnels compiles (almost) no
+    whole-stage-codegen classes. One run compiles ~300; Spark's default
+    generated-class cache of 100 entries evicted them within the run, so
+    every run compiled them all again. ``session._DEFAULTS`` sizes the
+    cache (``spark.sql.codegen.cache.maxEntries``) to hold them."""
+    from perfbench.gen import gen_documents
+    from perfbench.trace import codegen_counters
+    from perfbench.workloads import CORPUS_PARAMS, WEB_PARAMS
+
+    from jsonl_dataingestion_pipeline_spark.plans.corpus import curate_corpus
+    from jsonl_dataingestion_pipeline_spark.plans.webcorpus import (
+        extract_web_corpus,
+    )
+
+    docs = spark.createDataFrame(
+        gen_documents(5, 120),
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+
+    def run():
+        web, web_stats = extract_web_corpus(em._web_pages(docs), **WEB_PARAMS)
+        cur, cur_stats = curate_corpus(docs, **CORPUS_PARAMS)
+        return [sorted(map(repr, f.collect())) for f in (web, web_stats, cur, cur_stats)]
+
+    first = run()
+    compiled = codegen_counters(spark)[0]
+    assert run() == first
+    recompiled = codegen_counters(spark)[0] - compiled
+    assert recompiled <= 20, f"the second run compiled {recompiled} classes"
+
+
 def test_q133_kmeans_assignment_is_scan_plus_project(spark):
     """q133 (PLANS.md): the final assignment is ONE scan of the
     materialized quantized points (r10: pipeline_break'd once instead
