@@ -59,7 +59,13 @@ _TS_PATTERNS: tuple[str, ...] = (
 
 
 def parse_date_dayfirst(c: ColumnOrName) -> Column:
-    """F4 — day-first tolerant parse to ``date`` (null on failure)."""
+    """F4 — day-first tolerant parse to ``date`` (null on failure).
+
+    ``c`` is copied into each of the 19 ``try_to_date``/``try_to_timestamp``
+    candidates, so pass an attribute (or a lambda variable): a computed
+    input, such as ``clean_string(col)``, puts 19 copies of its tree into
+    the plan. Project it first, as ``plans.shipment.clean_columns`` does.
+    """
     s = F.trim(_col(c).cast("string"))
     candidates = [F.try_to_date(s, p) for p in _DATE_PATTERNS]
     candidates += [F.try_to_timestamp(s, F.lit(p)).cast("date") for p in _TS_PATTERNS]

@@ -61,28 +61,34 @@ _CLEAN_PROJECTIONS = SessionMemo()
 def clean_columns(df: DataFrame) -> DataFrame:
     """F1-F6 typing pass over the canonical all-string frame.
 
-    One ``select`` -> one codegen'd stage. Ordering mirrors
+    Two ``select``s, one codegen'd stage. Ordering mirrors
     `src/transformer.py:200-205` (strings -> IDs -> booleans -> dates) with
     the list-producing multi-ID split (F6) adopted from the legacy
     transformer per SURVEY.md §7.3.2.
 
-    The ~100 cleaning expressions are memoized by column list in a
-    ``SessionMemo``.
+    The first ``select`` cleans every column and types all but the dates;
+    the second parses the dates from the cleaned strings' attributes.
+    A date parse reads its input once per candidate pattern, so parsing
+    ``clean_string(c)`` in place would copy that tree into each of them
+    (:func:`parse_date_dayfirst`).
+
+    The two projections are memoized by column list in a ``SessionMemo``.
     """
 
-    def build() -> list:
+    def build() -> tuple:
         multi_dates = set(MULTI_VALUED_DATE_COLS)
         multi_ids = set(MULTI_VALUED_ID_COLS)
         booleans = set(BOOLEAN_COLUMNS)
         dates = set(DATE_COLUMNS)
         ids = set(ID_COLUMNS)
-        projection = []
+        cleaned, typed = [], []
         for name in df.columns:
             c = F.col(f"`{name}`")
+            typed_expr = c
             if name in dates and name in multi_dates:
-                expr = parse_multi_dates(clean_string(c))
+                expr, typed_expr = clean_string(c), parse_multi_dates(c)
             elif name in dates:
-                expr = parse_date_dayfirst(clean_string(c))
+                expr, typed_expr = clean_string(c), parse_date_dayfirst(c)
             elif name in booleans:
                 expr = coerce_boolean(c)
             elif name in multi_ids:
@@ -91,10 +97,12 @@ def clean_columns(df: DataFrame) -> DataFrame:
                 expr = ensure_str_id(clean_string(c))
             else:
                 expr = clean_string(c)
-            projection.append(expr.alias(name))
-        return projection
+            cleaned.append(expr.alias(name))
+            typed.append(typed_expr.alias(name))
+        return cleaned, typed
 
-    return df.select(*_CLEAN_PROJECTIONS.get(df.sparkSession, tuple(df.columns), build))
+    cleaned, typed = _CLEAN_PROJECTIONS.get(df.sparkSession, tuple(df.columns), build)
+    return df.select(*cleaned).select(*typed)
 
 
 _CONSIGNEE_PROJECTIONS = SessionMemo()
@@ -189,8 +197,8 @@ def transform_shipments(
     """
     clock = _as_of_col(as_of)
     # Parallelism floor (optimization guide §2.5): the D1-D7 + T1-T7
-    # derivation tree is a very CPU-heavy codegen projection (the T6/T7
-    # narrative assembly alone is ~400 Column nodes of string work per
+    # derivation chain is a very CPU-heavy codegen projection (the T6/T7
+    # narrative and content assembly is string work over ~100 fields per
     # row); pipelined into a few-split scan it runs on that few tasks.
     # Repartition to defaultParallelism only when the input has fewer
     # partitions — a no-op on a real many-split scan.

@@ -8,8 +8,10 @@ top-k applying the group-limit optimization before the exchange.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# this checkout's entry module, whichever directory the suite runs from
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as em
 
@@ -96,7 +98,6 @@ def test_api_md_is_fresh():
     package source, so a change to the public surface that skips the
     regeneration fails here. An AST walk; no JVM."""
     import importlib.util
-    from pathlib import Path
 
     repo = Path(__file__).resolve().parents[1]
     spec = importlib.util.spec_from_file_location(
@@ -115,6 +116,65 @@ def test_shipment_transform_is_shuffle_free(spark, shipment_df_factory):
     df = transform_shipments(shipment_df_factory([{}]), as_of="2024-06-01")
     plan = _formatted(spark, df)
     assert "Exchange" not in plan  # clean -> derive -> narrative: one stage
+
+
+def test_shipment_document_plan_is_staged(shipment_df_factory):
+    """The date parse and the content assembly read shared sub-expressions
+    by attribute from staged projections. Re-inlined, each Column used N
+    times is N copies of its tree, and the document plan grows to ~134k
+    optimized nodes, whose Catalyst passes cost more than the run."""
+    from jsonl_dataingestion_pipeline_spark.plans.shipment import (
+        build_documents,
+        transform_shipments,
+    )
+
+    docs = build_documents(
+        transform_shipments(shipment_df_factory([{}]), as_of="2024-06-01")
+    )
+    plan = docs._jdf.queryExecution().optimizedPlan()
+    nodes = plan.toJSON().count('"class":')
+    assert nodes <= 35_000, f"{nodes} optimized nodes"
+
+
+def test_staging_columns_do_not_leak(shipment_df_factory):
+    """The staged projections' hidden columns are dropped again: the
+    transform's columns and the documents' ``metadata`` fields (every
+    transform column but the excluded ones) are exactly these."""
+    from jsonl_dataingestion_pipeline_spark.plans.shipment import (
+        build_documents,
+        transform_shipments,
+    )
+    from jsonl_dataingestion_pipeline_spark.schema import (
+        CANONICAL_COLUMNS,
+        DROP_COLUMNS_AFTER_LOAD,
+    )
+
+    derived = transform_shipments(shipment_df_factory([{}]), as_of="2024-06-01")
+    expected = [c for c in CANONICAL_COLUMNS if c not in DROP_COLUMNS_AFTER_LOAD] + [
+        "consignee_name",
+        "consignee_codes",
+        "optimal_ata_dp_date",
+        "optimal_eta_fd_date",
+        "delayed_dp",
+        "dp_delayed_dur",
+        "delayed_fd",
+        "fd_delayed_dur",
+        "shipment_status",
+        "workflow_gap_flags",
+        "source_group",
+        "source_month_tag",
+        "critical_dates_summary",
+        "delay_reason_summary",
+        "vessel_summary",
+        "carrier_summary",
+        "port_route_summary",
+        "milestones",
+        "combined_content",
+    ]
+    assert derived.columns == expected
+    excluded = {"carr_eqp_uid", "consignee_raw", "combined_content", "consignee_codes"}
+    metadata = build_documents(derived).schema["metadata"].dataType.fieldNames()
+    assert metadata == [c for c in expected if c not in excluded] + ["consignee_codes"]
 
 
 def test_run_batch_scans_csv_once(spark, tmp_path):

@@ -17,7 +17,11 @@ Exit code 0 iff every stage passes. Stages:
      guard: only ``operators/common.py`` calls ``localCheckpoint`` /
      ``checkpoint``, and no function takes a ``reliable`` flag, and
      the JVM-free API.md freshness guard: API.md equals
-     ``tools/gen_api.py``'s ``render()``.
+     ``tools/gen_api.py``'s ``render()``, and the staged-plan guard:
+     the shipment document plan stays at most 35,000 optimized nodes
+     (134k when the date parse and the content assembly copy their
+     shared sub-expressions) and its staging columns never reach the
+     output.
   3. (--heavy) the shuffle-heavy dedup/similarity family at sf0.1.
   4. (--full) the whole pytest suite.
 """
