@@ -56,8 +56,9 @@ the timed loop compiles only 106-120 more over all 117 queries and 234
 attempts: 98 queries compile none, q25 two. Spark's default cache of 100
 entries evicted the warmup's classes before the timed loop reached them,
 so every attempt compiled again (2,721-2,762 classes, 18.7-20.2s of
-Janino time; two runs each). The rest of the constant is not codegen and
-is not attributed yet. Per query, ``bench_detail.json`` records
+Janino time; two runs each). The rest of the constant is HotSpot JIT:
+q25's ``jit_ms`` is about the size of its first-run excess (SCALING.md
+"The q25 first-run constant"). Per query, ``bench_detail.json`` records
 ``codegen_compiles``, ``codegen_ms`` (Janino) and ``jit_ms`` (HotSpot),
 each summed over the attempts, and ``runtime`` records the effective
 cache size.

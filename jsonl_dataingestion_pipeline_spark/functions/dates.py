@@ -83,7 +83,10 @@ def parse_multi_dates(c: ColumnOrName) -> Column:
         F.transform(parts, lambda x: parse_date_dayfirst(x)),
         lambda d: d.isNotNull(),
     )
-    return F.when(F.size(parsed) > 0, parsed)
+    # the null-if-empty test reads the array twice: bound to a lambda
+    # variable, the 19-candidate parse is one copy in the plan and runs
+    # once per cell
+    return F.transform(F.array(parsed), lambda a: F.when(F.size(a) > 0, a))[0]
 
 
 def fmt_display(c: ColumnOrName) -> Column:

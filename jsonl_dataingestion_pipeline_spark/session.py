@@ -13,6 +13,14 @@ on ``local[*]``:
 - Generated-class cache sized to the engine's measured working set, so a
   warm run reuses its whole-stage-codegen classes instead of compiling
   them again.
+- A JIT policy for the driver JVM: HotSpot's C2 (tier 4) thresholds
+  raised by one common factor, so C2 stops compiling the planner code
+  that a short batch process runs only lukewarm. The flags are JVM
+  options, so they apply only when ``get_spark`` launches the JVM; a
+  session whose JVM is already running (or that a cluster manager
+  launched with its own driver options) keeps the JIT policy it started
+  with, and an ``extra_conf`` entry for
+  ``spark.driver.defaultJavaOptions`` replaces the policy.
 - PySpark DataFrame-debugging origin capture DISABLED
   (``spark.python.sql.dataFrameDebugging.enabled=false``): it costs 3
   py4j round trips + a Python stack walk per DataFrame API call, pure
@@ -59,6 +67,25 @@ _DEFAULTS: dict[str, str] = {
     # classes stay loaded: over the tier-1 session metaspace grew 213 ->
     # 249 MB and peak JVM RSS 2.10 -> 2.19 GB.
     "spark.sql.codegen.cache.maxEntries": "8192",
+    # Driver JIT policy: HotSpot's tier-4 (C2) thresholds x3 (defaults
+    # Invocation 5000, MinInvocation 600, Compile 15000, BackEdge 40000).
+    # The driver plans a few large Catalyst trees a bounded number of
+    # times per process; at the default thresholds C2 compiles that
+    # lukewarm planner code and took ~60% of a warm perfbench iteration's
+    # CPU. Sweep (4 cores, median of two `--trace 0` runs, factor: cpu_s
+    # curation_funnels / shipment_increments): x1 23.8 / 19.6, x2 19.2 /
+    # 17.2, x3 16.0 / 15.4, x5 17.4 / 14.3, x10 16.3 / 14.6 s. setup_s
+    # stayed within the runs' spread; an earlier x10 sweep raised
+    # curation_funnels' by 14-32%. x3 is the smallest factor that takes
+    # the curation gain, and a larger one delays C2 further for long
+    # sessions too (SCALING.md "Driver JIT policy"). Spark prepends
+    # defaultJavaOptions to extraJavaOptions, so a caller that sets the
+    # latter keeps these flags. Executor JVMs are left alone: they run
+    # hot generated loops.
+    "spark.driver.defaultJavaOptions": (
+        "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+        "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
+    ),
 }
 
 

@@ -29,13 +29,15 @@ def estimate_max_records_per_file(
     (SURVEY.md §4.2.2); the cap exists to satisfy an indexing-service file
     limit, so a conservative estimate is acceptable.
     """
-    sizes = (
-        df.limit(sample_rows)
-        .select(F.octet_length(F.to_json(F.struct("*"))).alias("sz"))
-        .agg(F.avg("sz").alias("avg_sz"))
-        .first()
-    )
-    avg = (sizes and sizes["avg_sz"]) or 1024.0
+    # ``take`` plans a CollectLimit, which stays out of whole-stage codegen.
+    # A limit inside a codegen'd stage names its row counter from a JVM-wide
+    # sequence (``_limit_counter_<n>``), so each call's stage was new code
+    # and compiled again.
+    sizes = [
+        r[0]
+        for r in df.select(F.octet_length(F.to_json(F.struct("*")))).take(sample_rows)
+    ]
+    avg = sum(sizes) / len(sizes) if sizes else 1024.0
     # leave 10% headroom for size skew
     return max(1, int(cap_bytes * 0.9 / float(avg)))
 

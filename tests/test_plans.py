@@ -136,6 +136,26 @@ def test_shipment_document_plan_is_staged(shipment_df_factory):
     assert nodes <= 35_000, f"{nodes} optimized nodes"
 
 
+def test_multi_date_parse_is_one_copy(spark):
+    """``parse_multi_dates`` holds one copy of the 19-candidate day-first
+    parse. Its null-if-empty test reads the filtered array twice, and
+    written as ``when(size(parsed) > 0, parsed)`` that is two copies:
+    443 optimized nodes against 100 for ``parse_date_dayfirst``."""
+    from jsonl_dataingestion_pipeline_spark.functions.dates import (
+        parse_date_dayfirst,
+        parse_multi_dates,
+    )
+
+    df = spark.createDataFrame([("01/01/2024",)], "v string")
+
+    def nodes(fn):
+        plan = df.select(fn("v"))._jdf.queryExecution().optimizedPlan()
+        return plan.toJSON().count('"class":')
+
+    single, multi = nodes(parse_date_dayfirst), nodes(parse_multi_dates)
+    assert multi <= single + 40, f"{multi} nodes against {single}"
+
+
 def test_staging_columns_do_not_leak(shipment_df_factory):
     """The staged projections' hidden columns are dropped again: the
     transform's columns and the documents' ``metadata`` fields (every
@@ -429,6 +449,19 @@ def test_q118_stage_checkpoints_prevent_recompute(spark):
     assert "WindowGroupLimit" in tree, tree
 
 
+def test_driver_jvm_runs_the_jit_policy(spark):
+    """The session's JVM was launched with every flag of the driver JIT
+    policy (``session._DEFAULTS["spark.driver.defaultJavaOptions"]``).
+    JVM options apply only when ``get_spark`` launches the JVM, so a
+    session whose JVM was started any other way fails here."""
+    from jsonl_dataingestion_pipeline_spark.session import _DEFAULTS
+
+    flags = _DEFAULTS["spark.driver.defaultJavaOptions"].split()
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = set(mx.getRuntimeMXBean().getInputArguments())
+    assert flags and [f for f in flags if f not in args] == []
+
+
 def test_warm_funnels_reuse_generated_classes(spark):
     """A second run of the web and corpus funnels compiles (almost) no
     whole-stage-codegen classes. One run compiles ~300; Spark's default
@@ -459,6 +492,26 @@ def test_warm_funnels_reuse_generated_classes(spark):
     assert run() == first
     recompiled = codegen_counters(spark)[0] - compiled
     assert recompiled <= 20, f"the second run compiled {recompiled} classes"
+
+
+def test_size_sample_reuses_generated_classes(spark):
+    """The JSONL sink's size sample over a new plan of a known shape
+    compiles nothing. A ``limit`` inside a whole-stage-codegen stage
+    names its row counter from a JVM-wide sequence, so every plan's
+    stage was new code: each warm funnel run compiled 4-6 classes."""
+    from perfbench.trace import codegen_counters
+
+    from jsonl_dataingestion_pipeline_spark.sources.jsonl import (
+        estimate_max_records_per_file,
+    )
+
+    def docs():
+        return spark.range(600).selectExpr("id", "repeat('x', id % 50) AS text")
+
+    first = estimate_max_records_per_file(docs())
+    compiled = codegen_counters(spark)[0]
+    assert estimate_max_records_per_file(docs()) == first
+    assert codegen_counters(spark)[0] == compiled
 
 
 def test_q133_kmeans_assignment_is_scan_plus_project(spark):

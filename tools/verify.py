@@ -21,7 +21,12 @@ Exit code 0 iff every stage passes. Stages:
      the shipment document plan stays at most 35,000 optimized nodes
      (134k when the date parse and the content assembly copy their
      shared sub-expressions) and its staging columns never reach the
-     output.
+     output, and the multi-date parse holds one copy of the day-first
+     parse, and the JIT-policy guard: the session's JVM was launched
+     with every flag of ``session._DEFAULTS``'s
+     ``spark.driver.defaultJavaOptions``, and the size-sample guard: the
+     JSONL sink's size sample compiles no class for a new plan of a
+     shape it has run.
   3. (--heavy) the shuffle-heavy dedup/similarity family at sf0.1.
   4. (--full) the whole pytest suite.
 """
